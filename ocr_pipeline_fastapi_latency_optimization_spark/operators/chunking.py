@@ -24,13 +24,11 @@ from typing import List
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.transcripts import read_documents
+
 CHUNK_WORDS = 64
 CHUNK_STRIDE = 48  # overlap = CHUNK_WORDS - CHUNK_STRIDE = 16 words
 PACK_CONTEXT = 512
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def chunk_documents(
@@ -50,7 +48,7 @@ def chunk_documents(
 
     Emits the chunk fingerprint (md5) instead of the chunk text so the
     oracle comparison is exact without hashing megabytes of prose."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     w, s = int(chunk_words), int(stride)
     n = F.size(F.col("wds"))
     n_chunks = F.lit(1) + F.greatest(
@@ -128,7 +126,7 @@ def pack_sequences(
     ``chunk_documents`` first when documents must not straddle a
     boundary. Per-sequence output: document count, token total, and the
     covered doc-id range."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     from ..functions.textstats import token_count
 
     t = docs.select("doc_id", token_count(F.col("text")).alias("n_tokens"))
@@ -185,7 +183,7 @@ def encode_documents_df(
     the array_sort(collect_list(struct(pos, id))) pattern
     (collect_list alone is partition-order dependent). Token-less
     documents have no encoding (consistent with the embed path)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     toks = docs.select(
         "doc_id",
         F.posexplode(
@@ -248,7 +246,7 @@ def global_shuffle(
     ``write.partitionBy(pos div shard_size)``."""
     from .dedup import global_sorted_rank
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     key = (
         F.conv(
             F.substring(
@@ -392,7 +390,7 @@ def cdc_chunks(
     from .scanpar import ensure_scan_parallelism
 
     docs = ensure_scan_parallelism(
-        docs if docs is not None else _docs(spark, sf_dir)
+        docs if docs is not None else read_documents(spark, sf_dir)
     )
     tok_hash = (
         "pmod(CAST(conv(substring(md5(element_at(toks, p)), 1, 15), 16, 10) "

@@ -18,14 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.transcripts import read_documents
+
 # RE2-and-Java-safe PII patterns, applied in this order
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PHONE = r"\+?\d{3}[-. ]\d{3,4}[-. ]\d{4}"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def pii_mask(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
@@ -34,7 +32,7 @@ def pii_mask(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) ->
     must not double-mask), and count each kind per document. Pure narrow
     regexp_replace/extract_all chain — zero shuffles, whole-stage
     codegen; the exact shape this runs at 10^12 rows."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     masked = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(F.col("text"), PII_EMAIL, "<EMAIL>"),
@@ -81,7 +79,7 @@ def boilerplate_lines(
     # two consumers, and the repartition exchange re-executes per
     # consumer subtree — 0.59 s → 1.6 s at sf0.1. Single-task explode
     # is the cheaper shape for this operator.
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     lines = docs.select(
         "doc_id",
         F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
@@ -139,7 +137,7 @@ def repetition_stats(
     degenerate/generated text. One (doc, gram) aggregate — the shuffle
     key includes doc_id, so it scales with corpus size, never collides
     across documents."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     words = F.split(F.col("text"), " ")
     grams = F.when(
         F.size(words) >= n,
@@ -208,7 +206,7 @@ def stratified_hash_sample(
     cell < the stratum's rate (in 1/10000ths). Language-rebalancing a
     multilingual corpus is the canonical use. Narrow plan — the
     keep-decision is a pure projection; no shuffle, no rand()."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     rates = rates_e4 or DEFAULT_RATES_E4
     cell = _hash_grid(F.col("doc_id"))
     rate = F.lit(0)
@@ -236,7 +234,7 @@ def dataset_split(
     split: membership depends only on doc_id, so re-ingesting,
     re-partitioning or growing the corpus never moves an existing
     document across splits."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     cell = _hash_grid(F.col("doc_id"))
     split = (
         F.when(cell < bounds[0], F.lit("train"))
@@ -327,7 +325,7 @@ def corpus_report(spark: SparkSession, sf_dir: str, docs: DataFrame | None = Non
         token_count,
     )
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     staged = docs.select(
         token_count(F.col("text")).alias("n_tokens"),
         F.length("text").alias("n_chars_c"),
@@ -377,7 +375,7 @@ def quality_percentile_filter(
 
     from ..functions.textstats import quality_score_e4
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     scored = docs.select(
         "doc_id", "source", quality_score_e4(F.col("text")).alias("q")
     )
@@ -431,7 +429,7 @@ def quality_threshold_filter(
 
     from ..functions.textstats import quality_score_e4
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     scored = docs.select(
         "doc_id", "source", quality_score_e4(F.col("text")).alias("q")
     )
@@ -489,7 +487,7 @@ def decontaminate(
     back to the doc list — never corpus × corpus."""
     from .dedup import word_shingles
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     ev = eval_docs.select(
         F.col(eval_docs.columns[0]).alias("doc_id"), F.col("text")
     )
@@ -518,7 +516,7 @@ def symbol_ratios(spark: SparkSession, sf_dir: str, docs: DataFrame | None = Non
     are bullets, fraction ending in ellipsis, and mean line length —
     the cheap filters a curation funnel applies before any model-based
     scoring."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     lines = F.split(F.col("text"), "\n")
     n_lines = F.size(lines)
     bullet = F.size(
@@ -570,7 +568,7 @@ def exact_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus."""
     from pyspark.sql import Window as W
 
-    docs = _docs(spark, sf_dir).select(
+    docs = read_documents(spark, sf_dir).select(
         "source", F.length("text").cast("long").alias("len")
     )
     hist = docs.groupBy("source", "len").agg(F.count("*").alias("c"))
@@ -604,7 +602,7 @@ def vocab_top_tokens(
     per-partition bounded heaps merged on the driver, never a global
     sort (the same bounded-top-k discipline as the knn heap). Total
     order (occurrences desc, token asc) makes the cut deterministic."""
-    toks = _docs(spark, sf_dir).select(
+    toks = read_documents(spark, sf_dir).select(
         "doc_id",
         F.explode(
             F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
@@ -629,7 +627,7 @@ def token_bigram_counts(
     (zip of the token array with its own shift — no join, no explode
     before the pair is formed), then the same bounded
     TakeOrderedAndProject top-k as ``vocab_top_tokens``."""
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     pairs = F.when(F.size(toks) < 2, F.array().cast("array<string>")).otherwise(
         F.zip_with(
@@ -676,7 +674,7 @@ def dataset_mixture(
     contribute (it neither constrains T nor yields rows — the mixture
     degrades; production checks the per-source report before
     packing)."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     shares = shares_e4 or MIXTURE_SHARES_E4
     bad = {s: v for s, v in shares.items() if int(v) <= 0}
     if bad or sum(int(v) for v in shares.values()) > 10000:
@@ -741,7 +739,7 @@ def temperature_mixture(
     crossJoins of 1-row/source-count frames, one narrow filter — the
     corpus is scanned once. ``n_s * W`` stays inside ANSI longs for any
     corpus up to ~10^12 docs/source (W grows only as sum of isqrts)."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     counts = docs.groupBy("source").agg(F.count("*").alias("n"))
     w = counts.withColumn(
         "w", F.expr("CAST(FLOOR(SQRT(CAST(n AS DOUBLE))) AS BIGINT)")
@@ -788,7 +786,7 @@ def vocab_coverage(
     at the first value v where cumulative mass reaches the threshold
     T_p = ceil(total * p / 100). Two bounded aggregates + one window
     over the bounded histogram; the corpus is scanned once."""
-    toks = _docs(spark, sf_dir).select(
+    toks = read_documents(spark, sf_dir).select(
         F.explode(
             F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
         ).alias("token")
@@ -868,7 +866,7 @@ def lm_bigram_score(
     # THREE consumers (per-doc counts, corpus bigram counts, unigram
     # counts) and each subtree re-executes the repartition exchange —
     # 1.14 s → 1.9 s at sf0.1.
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     pairs = F.when(
         F.size(toks) < 2, F.array().cast("array<struct<w1:string,w2:string>>")
@@ -962,7 +960,7 @@ def train_bpe_merges(
     pair_count), the exact artifact a tokenizer exports."""
     from pyspark.sql import types as T
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     toks = docs.select(
         F.explode(
             F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
@@ -1090,7 +1088,7 @@ def bpe_encode(
     word order — an order-exact fingerprint of the full token
     sequence (hashable by the driver without shipping token arrays).
     Docs with no encodable words carry (0, 0, md5(''))."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     if merges is None:
         merges = train_bpe_merges(spark, sf_dir, n_merges=n_merges, docs=docs)
     merge_rows = merges.orderBy("rank").collect()  # control plane: O(n)
@@ -1204,18 +1202,18 @@ def semantic_decontaminate(
     the same documented divergence class as
     ``incremental_text_semantic_dedup``."""
     from .embedding import (
-        TEXT_LSH_SEED,
         TEXT_NEAR_DUP_THRESHOLD_E6,
+        TEXT_PARAMS,
         _center_literals_frame,
-        _index_family,
         _sums_cosine_e6,
         _sums_with_norm,
+        _text_family,
         centered_band_buckets,
         embed_sums,
         require_text_center,
     )
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     if threshold_e6 is None:
         threshold_e6 = TEXT_NEAR_DUP_THRESHOLD_E6
     ev = eval_docs.select(
@@ -1225,11 +1223,8 @@ def semantic_decontaminate(
     if index_table is not None:
         from ..sources.catalog import check_index_params, prune_index_scan
 
-        props = check_index_params(
-            spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-        )
-        planes_list, bands = _index_family(props)
-        require_text_center(props, index_table)
+        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
+        planes_list, bands = _text_family(props, index_table, require_text_center)
         totals = _center_literals_frame(spark, props)
         ev_sums = embed_sums(ev)
         # materialized once: the eval buckets feed the prune-key
@@ -1320,7 +1315,7 @@ def blocklist_filter(
     size, fine for policy lists up to a few thousand words (beyond
     that, production switches to a broadcast map join on exploded
     tokens — the decontaminate shape)."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     bl = tuple(sorted(set(blocklist if blocklist is not None else DEFAULT_BLOCKLIST)))
     if not bl or any(("'" in w) or (" " in w) or (w == "") for w in bl):
         raise ValueError(f"blocklist must be non-empty simple tokens: {bl!r}")
@@ -1431,7 +1426,7 @@ def contamination_report(
     from .dedup import word_shingles
     from .embedding import TEXT_NEAR_DUP_THRESHOLD_E6
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     if threshold_e6 is None:
         threshold_e6 = TEXT_NEAR_DUP_THRESHOLD_E6
     ev = eval_docs.select(
@@ -1540,7 +1535,7 @@ def dsir_importance(
     doc-bucket table. Nothing all-pairs, nothing driver-side."""
     if n_buckets <= 0:
         raise ValueError("n_buckets must be positive")
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     pairs = F.when(F.size(toks) < 2, F.array().cast("array<string>")).otherwise(
         F.zip_with(
@@ -1617,7 +1612,7 @@ def bpe_compression_eval(
     (including OOV words the encoder skips) — the honest denominator
     for "how much text does one token carry".
     """
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     enc = bpe_encode(spark, sf_dir, n_merges=n_merges, docs=docs)
     per = (
         docs.select("doc_id", "source", "n_chars")
@@ -1740,7 +1735,7 @@ def cluster_safe_split(
         minhash_lsh_pairs,
     )
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     cc = connected_components(minhash_lsh_pairs(spark, sf_dir))
     joined = docs.select("doc_id").join(
         cc, docs["doc_id"] == cc["node"], "left"
@@ -1779,7 +1774,7 @@ def ccnet_perplexity_buckets(
     that boundary is empty ⇒ docs fall through toward tail)."""
     from pyspark.sql import Window as W
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     scored = lm_bigram_score(spark, sf_dir, docs=docs).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
@@ -1849,7 +1844,7 @@ def token_budget_plan(
     combined token count) against a broadcast share table — the
     planning step upstream of ``dataset_mixture``/``export_shards``;
     its output is human-review-sized at any corpus scale."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     shares = shares_e4 or MIXTURE_SHARES_E4
     bad = {s: v for s, v in shares.items() if int(v) <= 0}
     if bad or sum(int(v) for v in shares.values()) > 10000:
@@ -1928,7 +1923,7 @@ def script_mix_report(
     length(regexp_replace(…)) per class — zero shuffles at any corpus
     size. Ranges are BMP-only for cross-engine parity (see
     SCRIPT_RANGES)."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     sel = [F.col("doc_id")]
     for name, rng in SCRIPT_RANGES.items():
         sel.append(
@@ -1962,7 +1957,7 @@ def lang_mismatch_report(
     pass. One narrow JVM expression per row — zero shuffles."""
     from ..functions.textstats import lang_id
 
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     pred = lang_id(F.col("text"))
     return docs.select(
         "doc_id",
@@ -1995,7 +1990,7 @@ def gram_novelty(
     pairs are distinct), one join back on the gram key, one per-doc
     aggregate — the decontaminate/winnowing shuffle discipline; no
     stage is all-pairs."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     # guard: F.sequence(1, 0) yields a DESCENDING [1, 0], not empty
     grams = F.when(
@@ -2060,7 +2055,7 @@ def collocations_pmi(
     corpus scale); the e6 result is BIGINT-safe for any min_count ≥ 2
     below ~10¹⁴ tokens (docstring bound, enforced nowhere — the e6
     grid would be rescaled for a corpus beyond it)."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
@@ -2133,7 +2128,7 @@ def decontaminate_spans(
     span width), a position anti-join for kept tokens, and per-document
     bounded aggregates — no window touches the corpus; span-start
     counting is a self-anti-join on (doc, p−1), not a lag window."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     if buffer < 0:
         raise ValueError(f"buffer must be >= 0, got {buffer}")
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))

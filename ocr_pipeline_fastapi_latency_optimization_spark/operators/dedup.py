@@ -31,6 +31,16 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.textstats import fingerprint
+from ..sources.catalog import (
+    IndexFamily,
+    append_index_batch,
+    check_index_params,
+    get_table_properties,
+    persist_index,
+    prune_index_scan,
+    set_table_properties,
+)
+from ..sources.transcripts import read_documents
 
 SHINGLE_WORDS = 5
 MINHASH_PERMS = 32
@@ -39,10 +49,6 @@ MINHASH_BANDS = 8  # 8 bands x 4 rows
 # module constant interpolated into the DuckDB twins (round-3 ADVICE #6:
 # a literal 250 in the SQL silently desynchronizes if the default moves).
 INGEST_BOUNDARY = 250
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # --- exact dedup --------------------------------------------------------------
@@ -61,7 +67,7 @@ def exact_duplicate_groups_df(docs: DataFrame) -> DataFrame:
 
 
 def exact_duplicate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_duplicate_groups_df(_docs(spark, sf_dir))
+    return exact_duplicate_groups_df(read_documents(spark, sf_dir))
 
 
 def exact_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,7 +75,7 @@ def exact_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical id and a survivor flag (window min over the fingerprint)."""
     from pyspark.sql import Window as W
 
-    d = _docs(spark, sf_dir).select(
+    d = read_documents(spark, sf_dir).select(
         "doc_id", fingerprint(F.col("text")).alias("fp")
     )
     w = W.partitionBy("fp")
@@ -88,7 +94,7 @@ def incremental_dedup(
     (anti-join) — the production mode where dedup runs per-ingest against
     a fingerprint index, never corpus x corpus. ``boundary`` splits the
     documents table into existing (< boundary) and new (>= boundary)."""
-    docs = _docs(spark, sf_dir).select(
+    docs = read_documents(spark, sf_dir).select(
         "doc_id", fingerprint(F.col("text")).alias("fp")
     )
     existing = docs.filter(F.col("doc_id") < boundary).select("fp").distinct()
@@ -235,7 +241,7 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard near-dup pairs at threshold 0.8, via shingle
     equi-join and integer arithmetic (9·inter ≥ 4·(na+nb)). Emits integer
     evidence columns so the oracle comparison is exact."""
-    sh = word_shingles(_docs(spark, sf_dir), n=n)
+    sh = word_shingles(read_documents(spark, sf_dir), n=n)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -263,17 +269,6 @@ def ngram_jaccard_pairs(
 
 
 # --- MinHash + LSH ---------------------------------------------------------------
-
-
-def _hash60(col: Column, salt: str, fn: str) -> Column:
-    """60-bit integer hash of a string column. ``md5`` is bit-replicable
-    in plain Python (the pytest oracle); ``xxhash64`` is the fast JVM
-    path for benchmarks."""
-    if fn == "xxhash64":
-        return F.abs(F.xxhash64(F.concat(F.lit(salt), F.lit(":"), col)))
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), F.lit(":"), col)), 1, 15), 16, 10
-    ).cast("long")
 
 
 # Affine-permutation MinHash: ONE base hash per shingle, then
@@ -330,8 +325,12 @@ def _affine_base_py(digest60: int) -> int:
 def _affine_base(col: Column, fn: str) -> Column:
     if fn == "md5_affine":
         h = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    else:  # 'affine' fast path
+    elif fn == "affine":  # the fast path
         h = F.xxhash64(col)
+    else:
+        raise ValueError(
+            f"unknown MinHash hash_fn {fn!r}: use 'md5_affine' or 'affine'"
+        )
     return h.bitwiseAND(F.lit(_MASK31))
 
 
@@ -346,21 +345,17 @@ def minhash_signatures(
     df: DataFrame,
     n_perms: int = MINHASH_PERMS,
     n: int = SHINGLE_WORDS,
-    hash_fn: str = "md5",
+    hash_fn: str = "md5_affine",
 ) -> DataFrame:
     """(doc_id, h0..h{P-1}) MinHash signature via min aggregates over
     per-shingle hashes — one shuffle, pure JVM expressions, no Python.
 
-    ``hash_fn``: 'md5' / 'xxhash64' hash the salted shingle P times;
-    'affine' (fast, default for benchmarks) / 'md5_affine'
-    (Python-oracle-replicable) hash once and derive P permutations by
-    wrapping multiply-add."""
+    Each shingle is hashed ONCE and P permutations are derived by
+    affine multiply-add-mods: ``hash_fn`` 'md5_affine' (default;
+    Python- and DuckDB-replicable) takes an md5 base, 'affine' (the
+    fast benchmark path) an xxhash64 base."""
     sh = word_shingles(df, n=n, distinct=False)  # min() ignores duplicates
-    if hash_fn in ("affine", "md5_affine"):
-        base = _affine_base(F.col("shingle"), hash_fn)
-        hashes = _affine_hashes(base, n_perms)
-    else:
-        hashes = [_hash60(F.col("shingle"), str(p), hash_fn) for p in range(n_perms)]
+    hashes = _affine_hashes(_affine_base(F.col("shingle"), hash_fn), n_perms)
     aggs = [F.min(h).alias(f"h{p}") for p, h in enumerate(hashes)]
     return sh.groupBy("doc_id").agg(*aggs)
 
@@ -391,6 +386,14 @@ def minhash_band_buckets(
     )
 
 
+def _minhash_buckets(
+    docs: DataFrame, n_perms: int, bands: int, hash_fn: str = "md5_affine"
+) -> DataFrame:
+    """(doc_id, band, bucket) LSH rows of a (doc_id, text) frame."""
+    sig = minhash_signatures(docs, n_perms=n_perms, hash_fn=hash_fn)
+    return minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
+
+
 def minhash_lsh_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -407,8 +410,7 @@ def minhash_lsh_pairs(
     Wegman multiply-add-mods (~3.5× faster than P md5s) while staying
     bit-replicable both in plain Python (pytest oracle) and DuckDB SQL
     (driver oracle)."""
-    sig = minhash_signatures(_docs(spark, sf_dir), n_perms=n_perms, hash_fn=hash_fn)
-    buckets = minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
+    buckets = _minhash_buckets(read_documents(spark, sf_dir), n_perms, bands, hash_fn)
     return _lsh_candidate_pairs(buckets).orderBy("doc_a", "doc_b")
 
 
@@ -474,6 +476,24 @@ def _jaccard_verified_edges(
     )
 
 
+MINHASH_INDEX = IndexFamily(
+    "minhash", ("band", "bucket"), ("band", "bucket"), "doc_id", "text",
+    "minhash.max_doc_id",
+)
+
+
+def _minhash_params(n_perms: int, bands: int, hash_fn: str) -> dict:
+    """The MinHash index's parameter manifest: a probe hashing with
+    different n_perms/bands/hash_fn than the index was built with
+    produces silently wrong verdicts, so persist records these and every
+    append and probe handshakes on them."""
+    return {
+        "minhash.n_perms": n_perms,
+        "minhash.bands": bands,
+        "minhash.hash_fn": hash_fn,
+    }
+
+
 def persist_minhash_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -490,48 +510,18 @@ def persist_minhash_index(
     bucketing key, so Spark reads the index co-located and plans the
     semi-join with NO Exchange on the index side; only the (small) probe
     batch shuffles. ``tests/test_dedup_similarity.py`` asserts that plan
-    property on the real index, not a stand-in table."""
-    from ..sources.catalog import set_table_properties, write_bucketed_table
-
-    sig = minhash_signatures(docs, n_perms=n_perms, hash_fn=hash_fn)
-    buckets = minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
-    # sorted small row groups: probe-side pruning pushes the batch's
-    # (band, bucket) set into this scan (catalog.prune_index_scan)
-    from ..sources.catalog import INDEX_ROWGROUP_BYTES
-
-    write_bucketed_table(
-        buckets,
+    property on the real index, not a stand-in table. max_doc_id is the
+    content watermark that append_to_minhash_index advances."""
+    return persist_index(
+        spark,
+        MINHASH_INDEX,
+        _minhash_buckets(docs, n_perms, bands, hash_fn),
         name,
         path,
-        ["band", "bucket"],
         n_storage_buckets,
-        sort_cols=["band", "bucket"],
-        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
+        docs,
+        _minhash_params(n_perms, bands, hash_fn),
     )
-    # parameter manifest (round-4 ADVICE #1): a probe hashing with
-    # different n_perms/bands/hash_fn than the index was built with
-    # produces silently wrong verdicts — record the build parameters so
-    # incremental_minhash_dedup can fail fast on mismatch. max_doc_id is
-    # the content watermark that append_to_minhash_index advances.
-    max_id = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-    set_table_properties(
-        docs.sparkSession,
-        name,
-        {
-            "minhash.n_perms": n_perms,
-            "minhash.bands": bands,
-            "minhash.hash_fn": hash_fn,
-            "minhash.max_doc_id": -1 if max_id is None else int(max_id),
-            # append metadata: the maintenance path re-reads the
-            # bucketing spec from here so it can never silently
-            # re-bucket the table (catalog.append_to_bucketed_index)
-            "minhash.path": path,
-            "minhash.n_storage_buckets": int(n_storage_buckets),
-            "minhash.bucket_cols": "band,bucket",
-            "minhash.sort_cols": "band,bucket",
-        },
-    )
-    return name
 
 
 def append_to_minhash_index(
@@ -543,8 +533,7 @@ def append_to_minhash_index(
     hash_fn: str = "md5_affine",
 ) -> dict:
     """Fold an ingest batch into a persisted MinHash LSH index
-    idempotently (round-4 verdict #3: the probe-only index gets its
-    maintenance path). The batch is hashed with the INDEX's recorded
+    idempotently. The batch is hashed with the INDEX's recorded
     parameters (handshake fails fast on mismatch), its (band, bucket,
     doc_id) rows are appended through the recorded bucket spec — the
     probe side stays Exchange-free afterwards (plan-asserted in tests)
@@ -553,37 +542,13 @@ def append_to_minhash_index(
     manifest) makes a double-append a recorded no-op. Appends must be
     monotone in doc_id past the index watermark; out-of-order ingest
     raises. Returns the append receipt dict."""
-    from ..sources.catalog import append_to_bucketed_index, check_index_params
-
-    check_index_params(
+    return append_index_batch(
         spark,
+        MINHASH_INDEX,
         index_table,
-        {
-            "minhash.n_perms": n_perms,
-            "minhash.bands": bands,
-            "minhash.hash_fn": hash_fn,
-        },
-        kind="minhash",
-    )
-    stat = docs_batch.agg(
-        F.count("*").alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    if stat["n"] == 0:
-        return {"status": "noop", "batch_fp": "empty", "table": index_table}
-    sig = minhash_signatures(docs_batch, n_perms=n_perms, hash_fn=hash_fn)
-    buckets = minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
-    return append_to_bucketed_index(
-        spark,
-        buckets,
-        index_table,
-        "minhash",
-        batch_fp=f"{stat['n']}:{stat['h']}",
-        batch_min_id=int(stat["lo"]),
-        batch_max_id=int(stat["hi"]),
-        watermark_key="minhash.max_doc_id",
+        docs_batch,
+        _minhash_params(n_perms, bands, hash_fn),
+        lambda props: _minhash_buckets(docs_batch, n_perms, bands, hash_fn),
     )
 
 
@@ -620,32 +585,21 @@ def incremental_minhash_dedup(
     both sides in-memory from the boundary split — the driver-oracle
     path, byte-identical output."""
     if index_table is not None:
-        from ..sources.catalog import check_index_params
-
-        # fail-fast parameter handshake (round-4 ADVICE #1): a probe
-        # hashed with different n_perms/bands/hash_fn than the index was
-        # built with silently produces wrong verdicts — the exact desync
-        # failure mode the checkpoint manifest eliminates for resume.
+        # fail-fast parameter handshake (round-4 ADVICE #1): the exact
+        # desync failure mode the checkpoint manifest eliminates for resume
         check_index_params(
-            spark,
-            index_table,
-            {
-                "minhash.n_perms": n_perms,
-                "minhash.bands": bands,
-                "minhash.hash_fn": hash_fn,
-            },
+            spark, index_table, _minhash_params(n_perms, bands, hash_fn),
             kind="minhash",
         )
-        new_docs = _docs(spark, sf_dir).filter(F.col("doc_id") >= boundary)
-        sig = minhash_signatures(new_docs, n_perms=n_perms, hash_fn=hash_fn)
+        new_docs = read_documents(spark, sf_dir).filter(F.col("doc_id") >= boundary)
         # materialized once: the batch buckets feed the prune-key
         # collect AND the probe join (O(batch) rows). Lazy checkpoint:
         # the prune-key collect right below is the materializing job,
         # so the probe pays ONE batch pass, not a separate eager
         # checkpoint job first (round-6 verdict #6)
-        new = minhash_band_buckets(
-            sig, n_perms=n_perms, bands=bands
-        ).localCheckpoint(eager=False)
+        new = _minhash_buckets(new_docs, n_perms, bands, hash_fn).localCheckpoint(
+            eager=False
+        )
         # consumption-side boundary guard (round-4 ADVICE #2 analog): an
         # index accidentally built over the full corpus would make every
         # new doc collide with its own index rows — keep doc_id in the
@@ -656,8 +610,6 @@ def incremental_minhash_dedup(
         # prune_index_scan (round-5 verdict #2) narrows the scan to the
         # batch's touched (band, bucket) set first — byte-identical
         # output, O(touched buckets) probe compute.
-        from ..sources.catalog import prune_index_scan
-
         existing_idx = (
             prune_index_scan(
                 spark.table(index_table), new, band_col="band", key_col="bucket"
@@ -667,10 +619,9 @@ def incremental_minhash_dedup(
             .distinct()
         )
     else:
-        sig = minhash_signatures(
-            _docs(spark, sf_dir), n_perms=n_perms, hash_fn=hash_fn
+        buckets = _minhash_buckets(
+            read_documents(spark, sf_dir), n_perms, bands, hash_fn
         )
-        buckets = minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
         existing_idx = (
             buckets.filter(F.col("doc_id") < boundary)
             .select("band", "bucket")
@@ -729,23 +680,14 @@ def minhash_verified_verdicts_for_batch(
     route them through exact ``incremental_dedup``. Returns
     (doc_id, verdict) unordered — callers sort or partition as they
     need."""
-    from ..sources.catalog import check_index_params, prune_index_scan
-
     check_index_params(
-        spark,
-        index_table,
-        {
-            "minhash.n_perms": n_perms,
-            "minhash.bands": bands,
-            "minhash.hash_fn": hash_fn,
-        },
+        spark, index_table, _minhash_params(n_perms, bands, hash_fn),
         kind="minhash",
     )
     batch = batch.select("doc_id", "text")
-    sig = minhash_signatures(batch, n_perms=n_perms, hash_fn=hash_fn)
     # lazy: the prune-key collect inside prune_index_scan materializes
     # the checkpoint — one batch pass, no separate eager job (verdict #6)
-    newb = minhash_band_buckets(sig, n_perms=n_perms, bands=bands).localCheckpoint(
+    newb = _minhash_buckets(batch, n_perms, bands, hash_fn).localCheckpoint(
         eager=False
     )
     idx = prune_index_scan(
@@ -829,7 +771,7 @@ def incremental_verified_dedup(
     the corpus store — O(matched docs), not O(corpus), because only
     verified-candidate partners need text. Byte-identical output
     (asserted in tests)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     if index_table is not None:
         batch = docs.filter(F.col("doc_id") >= boundary).select("doc_id", "text")
         corpus = docs.filter(F.col("doc_id") < boundary).select("doc_id", "text")
@@ -843,8 +785,7 @@ def incremental_verified_dedup(
             n=n,
             boundary=boundary,
         ).orderBy("doc_id")
-    sig = minhash_signatures(docs, n_perms=n_perms, hash_fn="md5_affine")
-    buckets = minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
+    buckets = _minhash_buckets(docs, n_perms, bands)
     newb = buckets.filter(F.col("doc_id") >= boundary)
     oldb = buckets.filter(F.col("doc_id") < boundary)
     cand = (
@@ -875,20 +816,6 @@ def _shingle_set(text: str, n: int) -> set:
     if len(words) >= n:
         return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
     return set()
-
-
-def minhash_signature_py(text: str, n_perms: int = MINHASH_PERMS, n: int = SHINGLE_WORDS) -> List[int]:
-    """Pure-Python oracle for ``minhash_signatures`` (md5 path) — used by
-    the pytest equality tests."""
-    shingles = _shingle_set(text, n)
-    out = []
-    for p in range(n_perms):
-        best = None
-        for s in shingles:
-            h = int(hashlib.md5(f"{p}:{s}".encode()).hexdigest()[:15], 16)
-            best = h if best is None or h < best else best
-        out.append(best)
-    return out
 
 
 def minhash_signature_affine_py(
@@ -1114,7 +1041,7 @@ def near_dedup_corpus(
     candidate pairs → star-contraction components → one left equi-join
     back onto the corpus (docs table is the probe side; the cluster
     labels are the tiny side, AQE broadcasts them)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_documents(spark, sf_dir).select("doc_id")
     cc = connected_components(minhash_lsh_pairs(spark, sf_dir, n_perms=n_perms, bands=bands))
     joined = docs.join(cc, docs["doc_id"] == cc["node"], "left")
     return joined.select(
@@ -1148,7 +1075,7 @@ def minhash_jaccard_estimates(
     32-term JVM expression per pair (no Python, no explode — the py4j
     lesson: one F.expr string, not 32 Column ops), and the exact triple
     reuses the candidates-only intersection join."""
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     sig = minhash_signatures(docs, n_perms=n_perms, hash_fn="md5_affine")
     buckets = minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
     cand = _lsh_candidate_pairs(buckets)
@@ -1220,9 +1147,8 @@ def _verified_pairs(
     candidate stage is the shared ``_lsh_candidate_pairs`` (no display
     ``orderBy`` — every consumer here aggregates; a range-partition
     sort before the verify would be a wasted exchange)."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
-    sig = minhash_signatures(docs, n_perms=n_perms, hash_fn="md5_affine")
-    buckets = minhash_band_buckets(sig, n_perms=n_perms, bands=bands)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
+    buckets = _minhash_buckets(docs, n_perms, bands)
     sh = word_shingles(docs, n=n)
     return _jaccard_verified_edges(_lsh_candidate_pairs(buckets), sh, sh)
 
@@ -1258,7 +1184,7 @@ def verified_near_dedup(
     Pairs sharing ZERO shingles never reach the threshold test (they
     vanish from the intersection count, and 9·0 >= 4·(n_a+n_b) is
     unsatisfiable for non-empty shingle sets)."""
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     verified = _verified_pairs(
         spark, sf_dir, n_perms=n_perms, bands=bands, n=n, docs=docs
     )
@@ -1304,7 +1230,7 @@ def quality_aware_dedup(
     other's quality score. The driver oracle pins the default (raw
     candidates, the ``near_dedup_corpus`` twin); the verified variant
     is pinned by the planted-collision pytest."""
-    docs = _docs(spark, sf_dir).select(
+    docs = read_documents(spark, sf_dir).select(
         "doc_id", F.length("text").cast("long").alias("quality")
     )
     edges = (
@@ -1374,7 +1300,7 @@ def _simhash_udf():
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .scanpar import ensure_scan_parallelism
 
-    return ensure_scan_parallelism(_docs(spark, sf_dir)).select(
+    return ensure_scan_parallelism(read_documents(spark, sf_dir)).select(
         "doc_id", _simhash_udf()(F.col("text")).alias("simhash")
     )
 
@@ -1488,7 +1414,7 @@ def substring_span_dedup(
     # NOT scan-parallelized (round-8, measured): the spans frame feeds
     # two consumers (corpus hash counts + the semi-join probe side) and
     # the repartition re-executes per subtree — 1.00 s → 1.15 s.
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     base = docs.select(
         "doc_id", "text", F.length("text").cast("long").alias("len")
     )
@@ -1652,7 +1578,7 @@ def winnowing_overlap(
     # fingerprints are tiny and regressed under the extra exchange, so
     # winnow_fingerprints itself stays unwrapped.
     docs = ensure_scan_parallelism(
-        docs if docs is not None else _docs(spark, sf_dir)
+        docs if docs is not None else read_documents(spark, sf_dir)
     )
     fp = winnow_fingerprints(docs, k, w)
     kept = fp.join(
@@ -1738,7 +1664,7 @@ def incremental_winnowing_overlap(
             f"invalid winnowing params k={k} w={w} "
             f"max_df={max_df} min_shared={min_shared}"
         )
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     new_fp = winnow_fingerprints(
         docs.filter(F.col("doc_id") >= boundary), k, w
     )
@@ -1748,14 +1674,7 @@ def incremental_winnowing_overlap(
         # probe join reuse the cache instead of re-running the gram
         # expression per consumer (round-6 verdict #6)
         new_fp = new_fp.localCheckpoint(eager=False)
-        from ..sources.catalog import check_index_params, prune_index_scan
-
-        check_index_params(
-            spark,
-            index_table,
-            {"winnow.k": k, "winnow.w": w},
-            kind="winnow",
-        )
+        check_index_params(spark, index_table, _winnow_params(k, w), kind="winnow")
         idx = prune_index_scan(
             spark.table(index_table),
             new_fp.select("fp"),
@@ -1806,6 +1725,15 @@ def incremental_winnowing_overlap(
     )
 
 
+WINNOW_INDEX = IndexFamily(
+    "winnow", ("fp",), ("fp",), "doc_id", "text", "winnow.max_doc_id"
+)
+
+
+def _winnow_params(k: int, w: int) -> dict:
+    return {"winnow.k": k, "winnow.w": w}
+
+
 def persist_winnowing_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -1822,37 +1750,16 @@ def persist_winnowing_index(
     pushed ``fp IN`` skip row groups (the same storage layout as the
     MinHash index). Selection parameters and the content watermark ride
     in TBLPROPERTIES behind the standard fail-fast handshake."""
-    from ..sources.catalog import (
-        INDEX_ROWGROUP_BYTES,
-        set_table_properties,
-        write_bucketed_table,
-    )
-
-    rows = winnow_fingerprints(docs, k, w)
-    write_bucketed_table(
-        rows,
+    return persist_index(
+        spark,
+        WINNOW_INDEX,
+        winnow_fingerprints(docs, k, w),
         name,
         path,
-        ["fp"],
         n_storage_buckets,
-        sort_cols=["fp"],
-        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
+        docs,
+        _winnow_params(k, w),
     )
-    max_id = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-    set_table_properties(
-        spark,
-        name,
-        {
-            "winnow.k": k,
-            "winnow.w": w,
-            "winnow.max_doc_id": -1 if max_id is None else int(max_id),
-            "winnow.path": path,
-            "winnow.n_storage_buckets": int(n_storage_buckets),
-            "winnow.bucket_cols": "fp",
-            "winnow.sort_cols": "fp",
-        },
-    )
-    return name
 
 
 def append_to_winnowing_index(
@@ -1869,29 +1776,13 @@ def append_to_winnowing_index(
     touched rows at probe time, an append needs no df maintenance:
     freshly folded boilerplate starts counting against the cap on the
     very next probe."""
-    from ..sources.catalog import append_to_bucketed_index, check_index_params
-
-    check_index_params(
-        spark, index_table, {"winnow.k": k, "winnow.w": w}, kind="winnow"
-    )
-    stat = docs_batch.agg(
-        F.count("*").alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    if stat["n"] == 0:
-        return {"status": "noop", "batch_fp": "empty", "table": index_table}
-    rows = winnow_fingerprints(docs_batch, k, w)
-    return append_to_bucketed_index(
+    return append_index_batch(
         spark,
-        rows,
+        WINNOW_INDEX,
         index_table,
-        "winnow",
-        batch_fp=f"{stat['n']}:{stat['h']}",
-        batch_min_id=int(stat["lo"]),
-        batch_max_id=int(stat["hi"]),
-        watermark_key="winnow.max_doc_id",
+        docs_batch,
+        _winnow_params(k, w),
+        lambda props: winnow_fingerprints(docs_batch, k, w),
     )
 
 
@@ -1999,10 +1890,8 @@ def bloom_dedup_probe(
         )
     if n_hashes is not None and n_hashes <= 0:
         raise ValueError(f"n_hashes must be positive, got {n_hashes}")
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     if index_table is not None:
-        from ..sources.catalog import check_index_params
-
         expected = {}
         if m_bits is not None:
             expected["bloom.m_bits"] = m_bits
@@ -2102,8 +1991,6 @@ def bloom_verdicts_for_batch(
     unparseable at auto-sized production m). Geometry is ADOPTED from
     the index's recorded properties (the only hashing that can answer
     membership in that filter)."""
-    from ..sources.catalog import check_index_params
-
     props = check_index_params(spark, index_table, {}, kind="bloom")
     for k in ("bloom.m_bits", "bloom.n_hashes"):
         if k not in props:
@@ -2187,8 +2074,6 @@ def persist_bloom_filter(
         )
     if n_hashes <= 0:
         raise ValueError(f"n_hashes must be positive, got {n_hashes}")
-    from ..sources.catalog import set_table_properties
-
     words = bloom_filter_words(docs, m_bits, n_hashes)
     words.write.mode("overwrite").option("path", path).format(
         "parquet"
@@ -2228,8 +2113,6 @@ def append_to_bloom_filter(
     rows, the cheapest rewrite of any index family here (at the 1% FPR
     10⁹-doc production size the filter is ~1.2 GB: still one small job
     per ingest batch)."""
-    from ..sources.catalog import get_table_properties, set_table_properties
-
     props = get_table_properties(spark, name)
     for k in ("bloom.m_bits", "bloom.n_hashes", "bloom.path"):
         if k not in props:

@@ -41,6 +41,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.catalog import (
+    IndexFamily,
+    append_index_batch,
+    check_index_params,
+    persist_index,
+    prune_index_scan,
+)
+from ..sources.transcripts import read_documents
 from .dedup import _MASK31, _affine_base, _affine_base_py
 
 EMBED_DIM = 64  # == similarity.LSH_DIM, so the hyperplane index applies as-is
@@ -69,10 +77,6 @@ def _embed_consts(n: int = EMBED_DIM):
     from .dedup import _affine_consts
 
     return _affine_consts(n, seed=_EMBED_SEED)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _token_base(docs: DataFrame, parallel: bool = False) -> DataFrame:
@@ -145,7 +149,7 @@ def embed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     token count and an md5 fingerprint of the 64 integer feature sums —
     scalars, so the cross-engine hash comparison is exact (the array
     itself is what ``embed_documents_df`` serves to downstream ops)."""
-    sums = embed_sums(_docs(spark, sf_dir), parallel=True)
+    sums = embed_sums(read_documents(spark, sf_dir), parallel=True)
     cols = ", ".join(f"CAST(s{d} AS STRING)" for d in range(EMBED_DIM))
     return sums.select(
         "doc_id",
@@ -414,6 +418,39 @@ def _index_family(props: dict):
     return _text_planes(n_planes), bands
 
 
+def _text_family(props: dict, table: str, *require) -> tuple:
+    """The recorded (planes_list, bands) of a text index whose
+    properties passed the ``TEXT_PARAMS`` handshake, after each
+    ``require(props, table)`` guard — the order every text probe and
+    append checks a persisted text index in."""
+    family = _index_family(props)
+    for guard in require:
+        guard(props, table)
+    return family
+
+
+# the text families' handshake: every probe and append adopts the
+# RECORDED planes/bands (_index_family), so only the plane stream's seed
+# is compared; persist records the family it sized (_text_params)
+TEXT_PARAMS = {"cosine.seed": TEXT_LSH_SEED}
+
+
+def _text_params(n_planes: int, bands: int) -> dict:
+    return {**TEXT_PARAMS, "cosine.n_planes": n_planes, "cosine.bands": bands}
+
+
+# global text index rows (vec_id, band, key); the domain and clustered
+# families add the ``domain`` (label or k-means cluster) to the key
+TEXT_INDEX = IndexFamily(
+    "cosine", ("band", "key"), ("band", "key"), "doc_id", "text",
+    "cosine.max_vec_id",
+)
+TEXT_DOMAIN_INDEX = IndexFamily(
+    "cosine", ("domain", "band", "key"), ("domain", "band", "key"),
+    "doc_id", "text", "cosine.max_vec_id",
+)
+
+
 def _center_literals_frame(spark: SparkSession, props: dict) -> DataFrame:
     """Rebuild the 1-row totals frame from a persisted index's recorded
     center properties (text.center_n / text.center_t)."""
@@ -561,7 +598,7 @@ def knn_text(
     dedup verify, not the banding."""
     from .similarity import _topk_per_query, cosine_e6
 
-    emb = embed_documents_df(_docs(spark, sf_dir)).select(
+    emb = embed_documents_df(read_documents(spark, sf_dir)).select(
         F.col("doc_id").alias("vec_id"), "embedding"
     )
     q = emb.filter(F.col("vec_id") < n_queries).select(
@@ -606,7 +643,7 @@ def knn_text_ivf(
     the recall-vs-work dial proven at both ends."""
     from .similarity import ivf_knn
 
-    emb = _scaled_text_emb(embed_sums(_docs(spark, sf_dir)))
+    emb = _scaled_text_emb(embed_sums(read_documents(spark, sf_dir)))
     return ivf_knn(
         spark,
         sf_dir,
@@ -637,8 +674,6 @@ def persist_text_cosine_index(
     appends (`append_to_text_cosine_index`) rehash batches with the
     index's RECORDED family (frozen at build — appends never re-size)
     and fail fast on any family mismatch."""
-    from ..sources.catalog import set_table_properties, write_bucketed_table
-
     # three consumers (totals collect, banding write, watermark) — one
     # materialization instead of re-running the token explode+aggregate
     # per consumer (the module's materialize-once rule; round-5 review)
@@ -647,49 +682,22 @@ def persist_text_cosine_index(
     n_planes, bands = _resolve_persist_family(
         n_planes, bands, int(totals_row["n"])
     )
-    totals = _center_literals_frame(
-        spark,
-        {
-            "text.center_n": int(totals_row["n"]),
-            "text.center_t": ",".join(
-                str(int(totals_row[f"t{d}"])) for d in range(EMBED_DIM)
-            ),
-        },
-    )
+    center = {
+        "text.center_n": int(totals_row["n"]),
+        "text.center_t": ",".join(
+            str(int(totals_row[f"t{d}"])) for d in range(EMBED_DIM)
+        ),
+    }
     buckets = centered_band_buckets(
-        sums, totals, planes_list=_text_planes(n_planes), bands=bands
+        sums,
+        _center_literals_frame(spark, center),
+        planes_list=_text_planes(n_planes),
+        bands=bands,
     )
-    from ..sources.catalog import INDEX_ROWGROUP_BYTES
-
-    write_bucketed_table(
-        buckets,
-        name,
-        path,
-        ["band", "key"],
-        n_storage_buckets,
-        sort_cols=["band", "key"],
-        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
+    return persist_index(
+        spark, TEXT_INDEX, buckets, name, path, n_storage_buckets, docs,
+        {**_text_params(n_planes, bands), **center},
     )
-    max_id = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-    set_table_properties(
-        spark,
-        name,
-        {
-            "cosine.n_planes": n_planes,
-            "cosine.bands": bands,
-            "cosine.seed": TEXT_LSH_SEED,
-            "cosine.max_vec_id": -1 if max_id is None else int(max_id),
-            "cosine.path": path,
-            "cosine.n_storage_buckets": int(n_storage_buckets),
-            "cosine.bucket_cols": "band,key",
-            "cosine.sort_cols": "band,key",
-            "text.center_n": int(totals_row["n"]),
-            "text.center_t": ",".join(
-                str(int(totals_row[f"t{d}"])) for d in range(EMBED_DIM)
-            ),
-        },
-    )
-    return name
 
 
 def append_to_text_cosine_index(
@@ -701,36 +709,19 @@ def append_to_text_cosine_index(
     the grown corpus would auto-size differently today), and delegates
     to the idempotent bucketed append (content-fp no-op on replay,
     monotone doc_id watermark)."""
-    from ..sources.catalog import append_to_bucketed_index, check_index_params
 
-    props = check_index_params(
-        spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-    )
-    planes_list, bands = _index_family(props)
-    require_text_center(props, index_table)
-    stat = docs_batch.agg(
-        F.count("*").alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    if stat["n"] == 0:
-        return {"status": "noop", "batch_fp": "empty", "table": index_table}
-    buckets = centered_band_buckets(
-        embed_sums(docs_batch),
-        _center_literals_frame(spark, props),
-        planes_list=planes_list,
-        bands=bands,
-    )
-    return append_to_bucketed_index(
-        spark,
-        buckets,
-        index_table,
-        "cosine",
-        batch_fp=f"{stat['n']}:{stat['h']}",
-        batch_min_id=int(stat["lo"]),
-        batch_max_id=int(stat["hi"]),
-        watermark_key="cosine.max_vec_id",
+    def rows_for(props):
+        planes_list, bands = _index_family(props)
+        return centered_band_buckets(
+            embed_sums(docs_batch),
+            _center_literals_frame(spark, props),
+            planes_list=planes_list,
+            bands=bands,
+        )
+
+    return append_index_batch(
+        spark, TEXT_INDEX, index_table, docs_batch, TEXT_PARAMS, rows_for,
+        check=lambda props, t: _text_family(props, t, require_text_center),
     )
 
 
@@ -786,14 +777,6 @@ def persist_text_domain_index(
     AND every domain's centering statistic (JSON in
     ``text.domain_centers``), so probes/appends re-band batches
     identically and fail fast on family mismatch or unseen domains."""
-    import json
-
-    from ..sources.catalog import (
-        INDEX_ROWGROUP_BYTES,
-        set_table_properties,
-        write_bucketed_table,
-    )
-
     sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
     sums_dom = sums.join(
         docs.select("doc_id", F.col(domain_col).alias("domain")), "doc_id"
@@ -801,7 +784,25 @@ def persist_text_domain_index(
     totals_rows = domain_totals(sums_dom).collect()  # K rows — control plane
     n_max = max((int(r["n"]) for r in totals_rows), default=0)
     n_planes, bands = _resolve_persist_family(n_planes, bands, n_max)
-    centers_json = json.dumps(
+    centers = {"text.domain_centers": _domain_centers_json(totals_rows)}
+    buckets = domain_centered_band_buckets(
+        sums_dom,
+        totals_dom=_domain_center_frame(spark, centers),
+        planes_list=_text_planes(n_planes),
+        bands=bands,
+    )
+    return persist_index(
+        spark, TEXT_DOMAIN_INDEX, buckets, name, path, n_storage_buckets, docs,
+        {**_text_params(n_planes, bands), **centers, "text.domain_col": domain_col},
+    )
+
+
+def _domain_centers_json(totals_rows) -> str:
+    """``text.domain_centers``: each domain's [n, t_0..t_63] centering
+    statistic as JSON (sums as strings — they exceed a double)."""
+    import json
+
+    return json.dumps(
         {
             r["domain"]: [int(r["n"])]
             + [str(int(r[f"t{d}"])) for d in range(EMBED_DIM)]
@@ -809,42 +810,15 @@ def persist_text_domain_index(
         },
         sort_keys=True,
     )
-    totals = _domain_center_frame(
-        spark, {"text.domain_centers": centers_json}
-    )
-    buckets = domain_centered_band_buckets(
-        sums_dom,
-        totals_dom=totals,
-        planes_list=_text_planes(n_planes),
-        bands=bands,
-    )
-    write_bucketed_table(
-        buckets,
-        name,
-        path,
-        ["domain", "band", "key"],
-        n_storage_buckets,
-        sort_cols=["domain", "band", "key"],
-        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
-    )
-    max_id = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-    set_table_properties(
-        spark,
-        name,
-        {
-            "cosine.n_planes": n_planes,
-            "cosine.bands": bands,
-            "cosine.seed": TEXT_LSH_SEED,
-            "cosine.max_vec_id": -1 if max_id is None else int(max_id),
-            "cosine.path": path,
-            "cosine.n_storage_buckets": int(n_storage_buckets),
-            "cosine.bucket_cols": "domain,band,key",
-            "cosine.sort_cols": "domain,band,key",
-            "text.domain_centers": centers_json,
-            "text.domain_col": domain_col,
-        },
-    )
-    return name
+
+
+def _unseen_domains(props: dict, domains: DataFrame) -> list:
+    """Domains in the one-column ``domains`` frame that the index has
+    no recorded center for (one distinct collect — control plane)."""
+    import json
+
+    known = set(json.loads(props["text.domain_centers"]))
+    return sorted({r["domain"] for r in domains.distinct().collect()} - known)
 
 
 def append_to_text_domain_index(
@@ -857,59 +831,32 @@ def append_to_text_domain_index(
     rows would leave those documents unindexed forever (append is
     state-changing, unlike the probe, which degrades unseen domains to
     ``new``); rebuild the index or route new domains elsewhere."""
-    import json
 
-    from ..sources.catalog import append_to_bucketed_index, check_index_params
-
-    props = check_index_params(
-        spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-    )
-    planes_list, bands = _index_family(props)
-    require_domain_centers(props, index_table)
-    domain_col = props.get("text.domain_col", "source")
-    stat = docs_batch.agg(
-        F.count("*").alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    if stat["n"] == 0:
-        return {"status": "noop", "batch_fp": "empty", "table": index_table}
-    known = set(json.loads(props["text.domain_centers"]))
-    batch_domains = {
-        r["domain"]
-        for r in docs_batch.select(
-            F.col(domain_col).alias("domain")
-        ).distinct().collect()
-    }
-    unseen = sorted(batch_domains - known)
-    if unseen:
-        raise ValueError(
-            f"append to {index_table}: batch contains domains with no "
-            f"recorded center {unseen} — their rows cannot be banded "
-            "under the frozen per-domain family and would be silently "
-            "unindexed. Rebuild the index over the grown domain set or "
-            "route new domains to a separate index."
+    def rows_for(props):
+        planes_list, bands = _index_family(props)
+        batch_dom = docs_batch.select(
+            "doc_id",
+            F.col(props.get("text.domain_col", "source")).alias("domain"),
         )
-    sums_dom = embed_sums(docs_batch).join(
-        docs_batch.select("doc_id", F.col(domain_col).alias("domain")),
-        "doc_id",
-    )
-    buckets = domain_centered_band_buckets(
-        sums_dom,
-        totals_dom=_domain_center_frame(spark, props),
-        planes_list=planes_list,
-        bands=bands,
-    )
-    return append_to_bucketed_index(
-        spark,
-        buckets,
-        index_table,
-        "cosine",
-        batch_fp=f"{stat['n']}:{stat['h']}",
-        batch_min_id=int(stat["lo"]),
-        batch_max_id=int(stat["hi"]),
-        watermark_key="cosine.max_vec_id",
+        unseen = _unseen_domains(props, batch_dom.select("domain"))
+        if unseen:
+            raise ValueError(
+                f"append to {index_table}: batch contains domains with no "
+                f"recorded center {unseen} — their rows cannot be banded "
+                "under the frozen per-domain family and would be silently "
+                "unindexed. Rebuild the index over the grown domain set or "
+                "route new domains to a separate index."
+            )
+        return domain_centered_band_buckets(
+            embed_sums(docs_batch).join(batch_dom, "doc_id"),
+            totals_dom=_domain_center_frame(spark, props),
+            planes_list=planes_list,
+            bands=bands,
+        )
+
+    return append_index_batch(
+        spark, TEXT_DOMAIN_INDEX, index_table, docs_batch, TEXT_PARAMS, rows_for,
+        check=lambda props, t: _text_family(props, t, require_domain_centers),
     )
 
 
@@ -937,15 +884,11 @@ def incremental_text_domain_dedup(
     from .dedup import INGEST_BOUNDARY
 
     boundary = INGEST_BOUNDARY if boundary is None else boundary
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     if index_table is not None:
-        from ..sources.catalog import check_index_params, prune_index_scan
 
-        props = check_index_params(
-            spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-        )
-        planes_list, bands = _index_family(props)
-        require_domain_centers(props, index_table)
+        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
+        planes_list, bands = _text_family(props, index_table, require_domain_centers)
         # the index's RECORDED domain column is the authority (the
         # centers are keyed by ITS values — probing on a different
         # column would silently match no center and report everything
@@ -976,20 +919,8 @@ def incremental_text_domain_dedup(
         existing_dom = sums_dom.filter(F.col("doc_id") < boundary)
         totals_rows = domain_totals(existing_dom).collect()
         n_max = max((int(r["n"]) for r in totals_rows), default=0)
-        import json as _json
-
         totals = _domain_center_frame(
-            spark,
-            {
-                "text.domain_centers": _json.dumps(
-                    {
-                        r["domain"]: [int(r["n"])]
-                        + [str(int(r[f"t{d}"])) for d in range(EMBED_DIM)]
-                        for r in totals_rows
-                    },
-                    sort_keys=True,
-                )
-            },
+            spark, {"text.domain_centers": _domain_centers_json(totals_rows)}
         )
         planes_list, bands = _resolve_text_family(None, None, n_max)
         buckets = domain_centered_band_buckets(
@@ -1077,15 +1008,11 @@ def incremental_text_semantic_dedup(
     from .dedup import INGEST_BOUNDARY
 
     boundary = INGEST_BOUNDARY if boundary is None else boundary
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     if index_table is not None:
-        from ..sources.catalog import check_index_params
 
-        props = check_index_params(
-            spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-        )
-        planes_list, bands = _index_family(props)
-        require_text_center(props, index_table)
+        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
+        planes_list, bands = _text_family(props, index_table, require_text_center)
         totals = _center_literals_frame(spark, props)
         new_sums = embed_sums(docs.filter(F.col("doc_id") >= boundary))
         # materialized once: the batch buckets feed the prune-key
@@ -1096,7 +1023,6 @@ def incremental_text_semantic_dedup(
         ).localCheckpoint(eager=False)
         # prune_index_scan (round-5 verdict #2): scan only the batch's
         # touched (band, key) set - byte-identical output
-        from ..sources.catalog import prune_index_scan
 
         existing = prune_index_scan(spark.table(index_table), new).filter(
             F.col("vec_id") < boundary
@@ -1258,7 +1184,7 @@ def semantic_dedup_text_by_domain(
     shape: (doc_id, cluster_id, keep) over every document."""
     from .dedup import connected_components
 
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     # EAGER here (round-8, measured): the lazy form regressed 3.6→9.2 s
     # — the first materializing job is the totals collect over
     # sums ⋈ docs, and the broadcast-join build side re-evaluated the
@@ -1442,11 +1368,6 @@ def persist_text_clustered_index(
     and re-bucket the corpus."""
     import json
 
-    from ..sources.catalog import (
-        INDEX_ROWGROUP_BYTES,
-        set_table_properties,
-        write_bucketed_table,
-    )
     from .similarity import _ivf_cents_frame_from_rows, kmeans_centroids
 
     sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
@@ -1461,59 +1382,28 @@ def persist_text_clustered_index(
     totals_rows = domain_totals(sums.join(primary, "doc_id")).collect()
     n_max = max((int(r["n"]) for r in totals_rows), default=0)
     n_planes, bands = _resolve_persist_family(n_planes, bands, n_max)
-    centers_json = json.dumps(
-        {
-            r["domain"]: [int(r["n"])]
-            + [str(int(r[f"t{d}"])) for d in range(EMBED_DIM)]
-            for r in totals_rows
-        },
-        sort_keys=True,
-    )
-    totals = _domain_center_frame(spark, {"text.domain_centers": centers_json})
+    centers = {"text.domain_centers": _domain_centers_json(totals_rows)}
     buckets = domain_centered_band_buckets(
         sums.join(asg, "doc_id"),
-        totals_dom=totals,
+        totals_dom=_domain_center_frame(spark, centers),
         planes_list=_text_planes(n_planes),
         bands=bands,
         carry=("rn",),
     )
-    write_bucketed_table(
-        buckets,
-        name,
-        path,
-        ["domain", "band", "key"],
-        n_storage_buckets,
-        sort_cols=["domain", "band", "key"],
-        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
-    )
-    max_id = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-    set_table_properties(
-        spark,
-        name,
+    centroids = {
+        str(int(r["centroid_id"])): [repr(float(x)) for x in r["c_emb"]]
+        for r in cents_rows
+    }
+    return persist_index(
+        spark, TEXT_DOMAIN_INDEX, buckets, name, path, n_storage_buckets, docs,
         {
-            "cosine.n_planes": n_planes,
-            "cosine.bands": bands,
-            "cosine.seed": TEXT_LSH_SEED,
-            "cosine.max_vec_id": -1 if max_id is None else int(max_id),
-            "cosine.path": path,
-            "cosine.n_storage_buckets": int(n_storage_buckets),
-            "cosine.bucket_cols": "domain,band,key",
-            "cosine.sort_cols": "domain,band,key",
-            "text.domain_centers": centers_json,
-            "clustered.centroids": json.dumps(
-                {
-                    str(int(r["centroid_id"])): [
-                        repr(float(x)) for x in r["c_emb"]
-                    ]
-                    for r in cents_rows
-                },
-                sort_keys=True,
-            ),
+            **_text_params(n_planes, bands),
+            **centers,
+            "clustered.centroids": json.dumps(centroids, sort_keys=True),
             "clustered.n_clusters": int(n_clusters),
             "clustered.soft_assign": int(soft_assign),
         },
     )
-    return name
 
 
 def append_to_text_clustered_index(
@@ -1527,59 +1417,38 @@ def append_to_text_clustered_index(
     silently unbanded rows would be unindexed forever); with frozen
     centroids every cluster id is known, so this only fires for a
     cluster that had ZERO primary members at build time."""
-    import json
 
-    from ..sources.catalog import append_to_bucketed_index, check_index_params
-
-    props = check_index_params(
-        spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-    )
-    planes_list, bands = _index_family(props)
-    require_clustered_centroids(props, index_table)
-    require_domain_centers(props, index_table)
-    stat = docs_batch.agg(
-        F.count("*").alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    if stat["n"] == 0:
-        return {"status": "noop", "batch_fp": "empty", "table": index_table}
-    sums = embed_sums(docs_batch)
-    asg = _clustered_soft_assign(
-        sums,
-        _clustered_cents_frame(spark, props),
-        int(props.get("clustered.soft_assign", DEDUP_SOFT_ASSIGN)),
-    )
-    known = set(json.loads(props["text.domain_centers"]))
-    batch_domains = {
-        r["domain"]
-        for r in asg.filter(F.col("rn") == 1).select("domain").distinct().collect()
-    }
-    unseen = sorted(batch_domains - known)
-    if unseen:
-        raise ValueError(
-            f"append to {index_table}: batch documents land in clusters "
-            f"with no recorded center {unseen} (zero primary members at "
-            "build time) — rebuild the index so those clusters carry a "
-            "centering statistic."
+    def rows_for(props):
+        planes_list, bands = _index_family(props)
+        sums = embed_sums(docs_batch)
+        asg = _clustered_soft_assign(
+            sums,
+            _clustered_cents_frame(spark, props),
+            int(props.get("clustered.soft_assign", DEDUP_SOFT_ASSIGN)),
         )
-    buckets = domain_centered_band_buckets(
-        sums.join(asg, "doc_id"),
-        totals_dom=_domain_center_frame(spark, props),
-        planes_list=planes_list,
-        bands=bands,
-        carry=("rn",),
-    )
-    return append_to_bucketed_index(
-        spark,
-        buckets,
-        index_table,
-        "cosine",
-        batch_fp=f"{stat['n']}:{stat['h']}",
-        batch_min_id=int(stat["lo"]),
-        batch_max_id=int(stat["hi"]),
-        watermark_key="cosine.max_vec_id",
+        unseen = _unseen_domains(
+            props, asg.filter(F.col("rn") == 1).select("domain")
+        )
+        if unseen:
+            raise ValueError(
+                f"append to {index_table}: batch documents land in clusters "
+                f"with no recorded center {unseen} (zero primary members at "
+                "build time) — rebuild the index so those clusters carry a "
+                "centering statistic."
+            )
+        return domain_centered_band_buckets(
+            sums.join(asg, "doc_id"),
+            totals_dom=_domain_center_frame(spark, props),
+            planes_list=planes_list,
+            bands=bands,
+            carry=("rn",),
+        )
+
+    return append_index_batch(
+        spark, TEXT_DOMAIN_INDEX, index_table, docs_batch, TEXT_PARAMS, rows_for,
+        check=lambda props, t: _text_family(
+            props, t, require_clustered_centroids, require_domain_centers
+        ),
     )
 
 
@@ -1609,16 +1478,13 @@ def incremental_text_clustered_dedup(
     from .dedup import INGEST_BOUNDARY
 
     boundary = INGEST_BOUNDARY if boundary is None else boundary
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     if index_table is not None:
-        from ..sources.catalog import check_index_params, prune_index_scan
 
-        props = check_index_params(
-            spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
+        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
+        planes_list, bands = _text_family(
+            props, index_table, require_clustered_centroids, require_domain_centers
         )
-        planes_list, bands = _index_family(props)
-        require_clustered_centroids(props, index_table)
-        require_domain_centers(props, index_table)
         totals = _domain_center_frame(spark, props)
         new_docs = docs.filter(F.col("doc_id") >= boundary)
         new_sums = embed_sums(new_docs)
@@ -1642,8 +1508,6 @@ def incremental_text_clustered_dedup(
     else:
         from .similarity import _ivf_cents_frame_from_rows, kmeans_centroids
 
-        import json as _json
-
         sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
         pre_sums = sums.filter(F.col("doc_id") < boundary)
         cents_rows = kmeans_centroids(
@@ -1659,17 +1523,7 @@ def incremental_text_clustered_dedup(
         totals_rows = domain_totals(pre_sums.join(primary_pre, "doc_id")).collect()
         n_max = max((int(r["n"]) for r in totals_rows), default=0)
         totals = _domain_center_frame(
-            spark,
-            {
-                "text.domain_centers": _json.dumps(
-                    {
-                        r["domain"]: [int(r["n"])]
-                        + [str(int(r[f"t{d}"])) for d in range(EMBED_DIM)]
-                        for r in totals_rows
-                    },
-                    sort_keys=True,
-                )
-            },
+            spark, {"text.domain_centers": _domain_centers_json(totals_rows)}
         )
         planes_list, bands = _resolve_text_family(None, None, n_max)
         buckets = domain_centered_band_buckets(
@@ -1773,7 +1627,7 @@ def semantic_dedup_text_clustered(
     labeled path: (doc_id, cluster_id, keep) over every document."""
     from .similarity import _assign_topn, kmeans_centroids
 
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
     emb = _scaled_text_emb(sums)
     cents = kmeans_centroids(emb, n_centroids=n_clusters)
@@ -1832,13 +1686,9 @@ def text_semantic_verdicts_for_batch(
     equality asserted in the streaming test). ``corpus_docs`` must be
     the index's build corpus (plus appended batches) — only candidate
     ids are re-embedded from it, O(candidates) not O(corpus)."""
-    from ..sources.catalog import check_index_params, prune_index_scan
 
-    props = check_index_params(
-        spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-    )
-    planes_list, bands = _index_family(props)
-    require_text_center(props, index_table)
+    props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
+    planes_list, bands = _text_family(props, index_table, require_text_center)
     totals = _center_literals_frame(spark, props)
     new_sums = embed_sums(batch_docs)
     # lazy: the prune-key collect is the materializing job (verdict #6)
@@ -1907,14 +1757,11 @@ def text_clustered_verdicts_for_batch(
     uses the STRICTLY-EARLIER guard (``index vec_id < doc_id``), which
     equals the boundary split whenever the index holds exactly the
     pre-batch corpus and the batch's ids are past its watermark."""
-    from ..sources.catalog import check_index_params, prune_index_scan
 
-    props = check_index_params(
-        spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
+    props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
+    planes_list, bands = _text_family(
+        props, index_table, require_clustered_centroids, require_domain_centers
     )
-    planes_list, bands = _index_family(props)
-    require_clustered_centroids(props, index_table)
-    require_domain_centers(props, index_table)
     totals = _domain_center_frame(spark, props)
     new_sums = embed_sums(batch_docs)
     asg = _clustered_soft_assign(
@@ -1998,7 +1845,7 @@ def semantic_dedup_text_corpus(
     the exact verify keeps the raw-cosine threshold semantics."""
     from .dedup import connected_components
 
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     pairs = text_near_dup_pairs(
         docs, threshold_e6=threshold_e6, planes_list=planes_list, bands=bands
     )

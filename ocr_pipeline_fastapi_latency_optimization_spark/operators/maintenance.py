@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..sources.transcripts import read_documents
+
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -151,7 +153,7 @@ def line_bucketing(spark: SparkSession, sf_dir: str, lines_per_page: int = 53) -
     """S5 (``FileIngestor.py:223-226``): the ≈53-lines-per-page
     pagination as fixed-size bucketing of a row_number."""
     w = W.partitionBy("source").orderBy("doc_id")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     return (
         docs.select(
             "source",

@@ -50,16 +50,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.transcripts import read_documents
+
 # default query: terms present in the sandbox corpus vocabulary with
 # differing frequencies, so ranking is non-vacuous at every SF
 BM25_QUERY = ("spark", "join", "window")
 BM25_K = 20
 BM25_K1_E1 = 12  # k1 = 1.2
 BM25_B_E2 = 75  # b = 0.75
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def bm25_search(
@@ -74,7 +72,7 @@ def bm25_search(
     deterministic total order (score desc, doc_id asc)."""
     if not terms:
         raise ValueError("terms must be non-empty")
-    docs = docs if docs is not None else _docs(spark, sf_dir)
+    docs = docs if docs is not None else read_documents(spark, sf_dir)
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
     # dl rides the explode; the term filter runs BEFORE the shuffle
     tf = (

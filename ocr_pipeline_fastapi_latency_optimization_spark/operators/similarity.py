@@ -15,6 +15,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from ..sources.catalog import (
+    IndexFamily,
+    append_index_batch,
+    check_index_params,
+    persist_index,
+    prune_index_scan,
+)
+
 DEFAULT_K = 5
 DEFAULT_QUERIES = 8
 IVF_CENTROIDS = 16
@@ -471,6 +479,20 @@ def cosine_band_buckets(emb: DataFrame) -> DataFrame:
     ).select("vec_id", F.col("e.band").alias("band"), F.col("e.key").alias("key"))
 
 
+COSINE_INDEX = IndexFamily(
+    "cosine", ("band", "key"), ("band", "key"), "vec_id", "embedding",
+    "cosine.max_vec_id",
+)
+# the hyperplane family (count/bands/seed are module constants baked
+# into the signature UDF): persist records it, appends and probes
+# handshake on it so a family mismatch fails fast
+COSINE_PARAMS = {
+    "cosine.n_planes": LSH_PLANES,
+    "cosine.bands": LSH_BANDS,
+    "cosine.seed": LSH_SEED,
+}
+
+
 def persist_cosine_index(
     spark: SparkSession,
     emb: DataFrame,
@@ -481,43 +503,26 @@ def persist_cosine_index(
     """Persist the hyperplane (band, key) LSH index bucketed by its
     probe key — the embedding twin of ``dedup.persist_minhash_index``:
     an ingest batch semi-joins the index with no Exchange on the index
-    side."""
-    from ..sources.catalog import (
-        INDEX_ROWGROUP_BYTES,
-        set_table_properties,
-        write_bucketed_table,
+    side. The recorded content watermark lets a probe filter to
+    pre-boundary rows instead of trusting the caller's build-time
+    filter."""
+    return persist_index(
+        spark, COSINE_INDEX, cosine_band_buckets(emb), name, path,
+        n_storage_buckets, emb, COSINE_PARAMS,
     )
 
-    write_bucketed_table(
-        cosine_band_buckets(emb),
-        name,
-        path,
-        ["band", "key"],
-        n_storage_buckets,
-        sort_cols=["band", "key"],
-        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
-    )
-    # parameter manifest (round-4 ADVICE #1/#2): record the hyperplane
-    # family (count/bands/seed are module constants baked into the
-    # signature UDF) and the content watermark, so a probe can fail fast
-    # on a family mismatch and filter to pre-boundary rows instead of
-    # trusting the caller's build-time filter.
-    max_id = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
-    set_table_properties(
-        emb.sparkSession,
-        name,
-        {
-            "cosine.n_planes": LSH_PLANES,
-            "cosine.bands": LSH_BANDS,
-            "cosine.seed": LSH_SEED,
-            "cosine.max_vec_id": -1 if max_id is None else int(max_id),
-            "cosine.path": path,
-            "cosine.n_storage_buckets": int(n_storage_buckets),
-            "cosine.bucket_cols": "band,key",
-            "cosine.sort_cols": "band,key",
-        },
-    )
-    return name
+
+def _refuse_text_index(props: dict, table: str) -> None:
+    # a centered TEXT index is a different hash family even when plane
+    # counts happen to collide — raw-banded appends would mix two
+    # families in one table
+    if "text.center_n" in props:
+        raise ValueError(
+            f"index table {table} is a CENTERED text index "
+            "(persist_text_cosine_index) — appending raw-banded rows "
+            "would mix two hash families in one table. Use "
+            "embedding.append_to_text_cosine_index."
+        )
 
 
 def append_to_cosine_index(
@@ -529,49 +534,14 @@ def append_to_cosine_index(
     monotone vec_id watermark, content-fingerprint no-op on replay,
     append through the recorded bucket spec (probe side stays
     Exchange-free). Returns the append receipt dict."""
-    from ..sources.catalog import (
-        append_to_bucketed_index,
-        check_index_params,
-        get_table_properties,
-    )
-
-    # the specific refusal first: a centered TEXT index is a different
-    # hash family even when plane counts happen to collide — raw-banded
-    # appends would mix two families in one table
-    if "text.center_n" in get_table_properties(spark, index_table):
-        raise ValueError(
-            f"index table {index_table} is a CENTERED text index "
-            "(persist_text_cosine_index) — appending raw-banded rows "
-            "would mix two hash families in one table. Use "
-            "embedding.append_to_text_cosine_index."
-        )
-    check_index_params(
+    return append_index_batch(
         spark,
+        COSINE_INDEX,
         index_table,
-        {
-            "cosine.n_planes": LSH_PLANES,
-            "cosine.bands": LSH_BANDS,
-            "cosine.seed": LSH_SEED,
-        },
-        kind="cosine",
-    )
-    stat = emb_batch.agg(
-        F.count("*").alias("n"),
-        F.min("vec_id").alias("lo"),
-        F.max("vec_id").alias("hi"),
-        F.sum(F.xxhash64("vec_id", "embedding").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    if stat["n"] == 0:
-        return {"status": "noop", "batch_fp": "empty", "table": index_table}
-    return append_to_bucketed_index(
-        spark,
-        cosine_band_buckets(emb_batch),
-        index_table,
-        "cosine",
-        batch_fp=f"{stat['n']}:{stat['h']}",
-        batch_min_id=int(stat["lo"]),
-        batch_max_id=int(stat["hi"]),
-        watermark_key="cosine.max_vec_id",
+        emb_batch,
+        COSINE_PARAMS,
+        lambda props: cosine_band_buckets(emb_batch),
+        refuse=_refuse_text_index,
     )
 
 
@@ -603,21 +573,9 @@ def incremental_cosine_dedup(
     boundary = INGEST_BOUNDARY if boundary is None else boundary
     emb = _emb(spark, sf_dir)
     if index_table is not None:
-        from ..sources.catalog import check_index_params
-
         # fail fast if the index was built under a different hyperplane
-        # family (round-4 ADVICE #1 analog — same hash-parameter
-        # handshake as the MinHash index probe)
-        check_index_params(
-            spark,
-            index_table,
-            {
-                "cosine.n_planes": LSH_PLANES,
-                "cosine.bands": LSH_BANDS,
-                "cosine.seed": LSH_SEED,
-            },
-            kind="cosine",
-        )
+        # family (the MinHash index probe's handshake)
+        check_index_params(spark, index_table, COSINE_PARAMS, kind="cosine")
         # materialized once: the batch buckets feed the prune-key
         # collect AND the probe join (O(batch) rows). Lazy: the collect
         # is the materializing job — no separate eager pass (verdict #6)
@@ -632,8 +590,6 @@ def incremental_cosine_dedup(
         # (narrow filter; bucketed co-location undisturbed).
         # prune_index_scan (round-5 verdict #2): scan only the batch's
         # touched (band, key) set — byte-identical output.
-        from ..sources.catalog import prune_index_scan
-
         existing = prune_index_scan(spark.table(index_table), new).filter(
             F.col("vec_id") < boundary
         )
@@ -964,6 +920,16 @@ def ivf_assignments(
     )
 
 
+IVF_INDEX = IndexFamily(
+    "ivf", ("bucket",), ("bucket", "vec_id"), "vec_id", "embedding",
+    "ivf.max_vec_id",
+)
+
+
+def _ivf_params(n_centroids: int) -> dict:
+    return {"ivf.n_centroids": int(n_centroids)}
+
+
 def persist_ivf_index(
     spark: SparkSession,
     emb: DataFrame,
@@ -987,12 +953,6 @@ def persist_ivf_index(
     re-bucket the corpus)."""
     import json
 
-    from ..sources.catalog import (
-        INDEX_ROWGROUP_BYTES,
-        set_table_properties,
-        write_bucketed_table,
-    )
-
     if train:
         cents = kmeans_centroids(emb, n_centroids=n_centroids)
     else:
@@ -1000,41 +960,27 @@ def persist_ivf_index(
             F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
         )
     cent_rows = cents.collect()  # K rows — control plane
-    cents_lit = _ivf_cents_frame_from_rows(spark, cent_rows)
-    assigned = _assign(emb, cents_lit).select(
+    assigned = _assign(emb, _ivf_cents_frame_from_rows(spark, cent_rows)).select(
         "vec_id", "embedding", F.col("centroid_id").alias("bucket")
     )
-    write_bucketed_table(
+    centroids = {
+        str(int(r["centroid_id"])): [repr(float(x)) for x in r["c_emb"]]
+        for r in cent_rows
+    }
+    return persist_index(
+        spark,
+        IVF_INDEX,
         assigned,
         name,
         path,
-        ["bucket"],
         n_storage_buckets,
-        sort_cols=["bucket", "vec_id"],
-        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
-    )
-    max_id = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
-    set_table_properties(
-        spark,
-        name,
+        emb,
         {
-            "ivf.n_centroids": int(n_centroids),
+            **_ivf_params(n_centroids),
             "ivf.trained": str(bool(train)),
-            "ivf.centroids": json.dumps(
-                {
-                    str(int(r["centroid_id"])): [repr(float(x)) for x in r["c_emb"]]
-                    for r in cent_rows
-                },
-                sort_keys=True,
-            ),
-            "ivf.max_vec_id": -1 if max_id is None else int(max_id),
-            "ivf.path": path,
-            "ivf.n_storage_buckets": int(n_storage_buckets),
-            "ivf.bucket_cols": "bucket",
-            "ivf.sort_cols": "bucket,vec_id",
+            "ivf.centroids": json.dumps(centroids, sort_keys=True),
         },
     )
-    return name
 
 
 def _ivf_cents_frame_from_rows(spark: SparkSession, rows) -> DataFrame:
@@ -1060,6 +1006,16 @@ def _ivf_cents_frame(spark: SparkSession, props: dict) -> DataFrame:
     )
 
 
+def _require_ivf_centroids(props: dict, table: str) -> dict:
+    if "ivf.centroids" not in props:
+        raise ValueError(
+            f"index table {table} records no centroids — it was not "
+            "written by persist_ivf_index; rebuild it before probing or "
+            "appending."
+        )
+    return props
+
+
 def append_to_ivf_index(
     spark: SparkSession, emb_batch: DataFrame, index_table: str
 ) -> dict:
@@ -1070,35 +1026,16 @@ def append_to_ivf_index(
     append — recall for new vectors depends on the build-time centroids
     still fitting the distribution; rebuild when drift accumulates
     (the recall-vs-rebuild trade every frozen ANN index makes)."""
-    from ..sources.catalog import append_to_bucketed_index, check_index_params
-
-    props = check_index_params(spark, index_table, {}, kind="ivf")
-    if "ivf.centroids" not in props:
-        raise ValueError(
-            f"index table {index_table} records no centroids — it was "
-            "not written by persist_ivf_index; rebuild it before "
-            "appending."
-        )
-    stat = emb_batch.agg(
-        F.count("*").alias("n"),
-        F.min("vec_id").alias("lo"),
-        F.max("vec_id").alias("hi"),
-        F.sum(F.xxhash64("vec_id", "embedding").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    if stat["n"] == 0:
-        return {"status": "noop", "batch_fp": "empty", "table": index_table}
-    assigned = _assign(emb_batch, _ivf_cents_frame(spark, props)).select(
-        "vec_id", "embedding", F.col("centroid_id").alias("bucket")
-    )
-    return append_to_bucketed_index(
+    return append_index_batch(
         spark,
-        assigned,
+        IVF_INDEX,
         index_table,
-        "ivf",
-        batch_fp=f"{stat['n']}:{stat['h']}",
-        batch_min_id=int(stat["lo"]),
-        batch_max_id=int(stat["hi"]),
-        watermark_key="ivf.max_vec_id",
+        emb_batch,
+        {},
+        lambda props: _assign(emb_batch, _ivf_cents_frame(spark, props)).select(
+            "vec_id", "embedding", F.col("centroid_id").alias("bucket")
+        ),
+        check=_require_ivf_centroids,
     )
 
 
@@ -1137,18 +1074,15 @@ def ivf_knn(
     (asserted in tests)."""
     probed_buckets = None
     if index_table is not None:
-        from ..sources.catalog import check_index_params
-
         props = check_index_params(
-            spark, index_table, {"ivf.n_centroids": n_centroids}, kind="ivf"
+            spark, index_table, _ivf_params(n_centroids), kind="ivf"
         )
-        if "ivf.centroids" not in props:
-            raise ValueError(
-                f"index table {index_table} records no centroids — "
-                "rebuild it with persist_ivf_index."
-            )
-        cents = _ivf_cents_frame(spark, props)
-        assigned = spark.table(index_table)
+        cents = _ivf_cents_frame(spark, _require_ivf_centroids(props, index_table))
+        # set semantics: a retried append whose receipt was lost leaves
+        # duplicate rows (catalog.append_index_batch); a duplicated
+        # neighbour must not take two top-k ranks. Filters on the bucket
+        # and id columns still push below the distinct into the scan.
+        assigned = spark.table(index_table).distinct()
     else:
         emb = _emb(spark, sf_dir) if emb is None else emb
         if train:

@@ -23,16 +23,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..sources.transcripts import read_documents
+
 CMS_DEPTH = 4  # independent hash rows; P(overestimate > eps) ~ exp(-depth)
 CMS_WIDTH = 512  # counters per row; overestimate eps ~ total_count / width
 CMS_TOPK = 20
 
 HLL_LOG2M = 8  # 2^8 = 256 registers; relative error ~ 1.04 / sqrt(m)
 HLL_WBITS = 52  # 60-bit hash minus the 8 register-index bits
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -88,7 +86,7 @@ def cms_token_counts(
     from .scanpar import ensure_scan_parallelism
 
     docs = ensure_scan_parallelism(
-        docs if docs is not None else _docs(spark, sf_dir)
+        docs if docs is not None else read_documents(spark, sf_dir)
     )
     toks = _tokens(docs)
     sketch = cms_sketch(toks, depth, width)
@@ -165,7 +163,7 @@ def hll_register_sketch(
     from .scanpar import ensure_scan_parallelism
 
     docs = ensure_scan_parallelism(
-        docs if docs is not None else _docs(spark, sf_dir)
+        docs if docs is not None else read_documents(spark, sf_dir)
     )
     m = 1 << HLL_LOG2M
     h = (

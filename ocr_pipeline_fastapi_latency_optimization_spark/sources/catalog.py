@@ -10,7 +10,10 @@ the same call sites — the downstream plans are identical either way
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from dataclasses import dataclass
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 ICEBERG_CATALOG = "spark_catalog"
 
@@ -137,8 +140,6 @@ def prune_index_scan(
     column (the winnowing fingerprint index): the trickle form is a
     plain pushed ``key IN (…)`` and the bulk form hashes the one
     column."""
-    from pyspark.sql import functions as F
-
     hash_cols = [key_col] if band_col is None else [band_col, key_col]
     # bounded collect: limit(max_pairs+1) makes the cap actually cap
     # driver cost (an over-cap probe returns before hauling the full
@@ -188,19 +189,97 @@ def prune_index_scan(
     return index_df.filter(F.expr(cond))
 
 
-def append_to_bucketed_index(
+@dataclass(frozen=True)
+class IndexFamily:
+    """The storage declaration of one persisted bucketed index family:
+    its TBLPROPERTIES namespace, bucket and sort columns, and the id and
+    content columns of its SOURCE rows — the max id is the watermark
+    (recorded under ``watermark_key``) and ``count:sum(xxhash64(id,
+    content))`` is an append batch's fingerprint. ``persist_index`` and
+    ``append_index_batch`` run the whole table protocol from it; the
+    families only build their rows."""
+
+    prefix: str
+    bucket_cols: tuple
+    sort_cols: tuple
+    id_col: str
+    content_col: str
+    watermark_key: str
+
+
+def _manifest_keys(prefix: str) -> tuple:
+    """The common layout keys every family records: (path,
+    n_storage_buckets, bucket_cols, sort_cols)."""
+    return tuple(
+        f"{prefix}.{k}"
+        for k in ("path", "n_storage_buckets", "bucket_cols", "sort_cols")
+    )
+
+
+def persist_index(
     spark: SparkSession,
+    family: IndexFamily,
     rows: DataFrame,
     name: str,
-    prefix: str,
-    batch_fp: str,
-    batch_min_id: int,
-    batch_max_id: int,
-    watermark_key: str,
+    path: str,
+    n_storage_buckets: int,
+    source: DataFrame,
+    params: dict,
+) -> str:
+    """Write a family's index ``rows`` as a table bucketed and sorted by
+    its key with small row groups (``INDEX_ROWGROUP_BYTES``: probe-side
+    pruning pushes the batch's key set into this scan), then record the
+    build manifest: ``params`` (the probes' fail-fast handshake), the
+    content watermark — max id of ``source``, one 1-row aggregate — and
+    the ``<prefix>.path/.n_storage_buckets/.bucket_cols/.sort_cols``
+    spec, which appends and compaction re-read so they can never
+    silently re-bucket the table."""
+    write_bucketed_table(
+        rows,
+        name,
+        path,
+        list(family.bucket_cols),
+        n_storage_buckets,
+        sort_cols=list(family.sort_cols),
+        rowgroup_bytes=INDEX_ROWGROUP_BYTES,
+    )
+    max_id = source.agg(F.max(family.id_col).alias("m")).collect()[0]["m"]
+    path_key, nb_key, cols_key, sort_key = _manifest_keys(family.prefix)
+    set_table_properties(
+        spark,
+        name,
+        {
+            **params,
+            family.watermark_key: -1 if max_id is None else int(max_id),
+            path_key: path,
+            nb_key: int(n_storage_buckets),
+            cols_key: ",".join(family.bucket_cols),
+            sort_key: ",".join(family.sort_cols),
+        },
+    )
+    return name
+
+
+def append_index_batch(
+    spark: SparkSession,
+    family: IndexFamily,
+    name: str,
+    batch: DataFrame,
+    params: dict,
+    rows_for: Callable[[dict], DataFrame],
+    refuse: Callable[[dict, str], object] | None = None,
+    check: Callable[[dict, str], object] | None = None,
 ) -> dict:
-    """Idempotent bucketed APPEND of an ingest batch's index rows — the
-    maintenance path the round-4 verdict asked for (#3): probe → append
-    survivors → later batches probe an index that includes them.
+    """Idempotent bucketed APPEND of an ingest batch to a persisted
+    index — the maintenance path: probe → append survivors → later
+    batches probe an index that includes them. The table properties are
+    read ONCE; ``refuse(props, name)`` runs a family's refusal of a
+    table of another family, the ``params`` handshake follows
+    (``check_index_params``), then ``check(props, name)`` runs the
+    family's own guards. The batch fingerprint and id range are one 1-row
+    aggregate; an empty batch is a no-op; ``rows_for(props)`` builds the
+    batch's index rows under the RECORDED parameters. Returns the
+    receipt ``{"status", "batch_fp", "table"}``.
 
     Correctness layering (mirrors plans/checkpoint.py):
 
@@ -218,26 +297,40 @@ def append_to_bucketed_index(
       append can never silently re-bucket the table; Spark additionally
       validates the spec against the existing table on write.
 
-    Crash window (round-5 ADVICE #2): a failure BETWEEN the data append
-    and the properties update leaves the batch's rows in the table with
-    no recorded fingerprint — the retry re-appends them. Verdicts stay
-    correct forever (set semantics above), but the duplicate rows are
-    dead weight the manifest cannot detect. ``compact_bucketed_index``
-    is the repair: rewrite the table DISTINCT through the recorded
-    bucket spec (run it after any append whose receipt was lost, or on
-    a dead-weight budget). At production scale this is Iceberg's
+    Crash window: a failure BETWEEN the data append and the properties
+    update leaves the batch's rows in the table with no recorded
+    fingerprint — the retry re-appends them. Verdicts stay correct
+    (set semantics above; exercised by fault injection in
+    tests/test_index_core.py), but the duplicate rows are dead weight
+    the manifest cannot detect. ``compact_bucketed_index`` is the
+    repair: rewrite the table DISTINCT through the recorded bucket spec
+    (run it after any append whose receipt was lost, or on a
+    dead-weight budget). At production scale this is Iceberg's
     ``rewrite_data_files`` plus a transactional snapshot-property
-    commit, which closes the window entirely.
-
-    At production scale the applied-batch list lives in the Iceberg
-    snapshot properties / a manifest table rather than session-catalog
-    TBLPROPERTIES — same protocol, durable store."""
+    commit, which closes the window entirely; the applied-batch list
+    then lives in the snapshot properties / a manifest table rather
+    than session-catalog TBLPROPERTIES — same protocol, durable
+    store."""
     props = get_table_properties(spark, name)
-    path_key, nb_key, cols_key = (
-        f"{prefix}.path",
-        f"{prefix}.n_storage_buckets",
-        f"{prefix}.bucket_cols",
-    )
+    if refuse is not None:
+        refuse(props, name)
+    _check_params(props, name, params, family.prefix)
+    if check is not None:
+        check(props, name)
+    stat = batch.agg(
+        F.count("*").alias("n"),
+        F.min(family.id_col).alias("lo"),
+        F.max(family.id_col).alias("hi"),
+        F.sum(
+            F.xxhash64(family.id_col, family.content_col).cast("decimal(38,0)")
+        ).alias("h"),
+    ).collect()[0]
+    if stat["n"] == 0:
+        return {"status": "noop", "batch_fp": "empty", "table": name}
+    batch_fp = f"{stat['n']}:{stat['h']}"
+    rows = rows_for(props)
+    prefix, watermark_key = family.prefix, family.watermark_key
+    path_key, nb_key, cols_key, sort_key = _manifest_keys(prefix)
     missing = [k for k in (path_key, nb_key, cols_key, watermark_key) if k not in props]
     if missing:
         raise ValueError(
@@ -249,10 +342,10 @@ def append_to_bucketed_index(
     if batch_fp in applied:
         return {"status": "noop", "batch_fp": batch_fp, "table": name}
     watermark = int(props[watermark_key])
-    if watermark >= 0 and batch_min_id <= watermark:
+    if watermark >= 0 and int(stat["lo"]) <= watermark:
         raise ValueError(
-            f"append to {name}: batch id range [{batch_min_id}, "
-            f"{batch_max_id}] is not strictly after the index watermark "
+            f"append to {name}: batch id range [{stat['lo']}, "
+            f"{stat['hi']}] is not strictly after the index watermark "
             f"{watermark} ({watermark_key}); appends must be monotone in "
             "id — a re-ingest of already-indexed ids would double-count "
             "buckets. Rebuild the index or fix the ingest ordering."
@@ -265,7 +358,7 @@ def append_to_bucketed_index(
     )
     # sort spec recorded at build time (absent on pre-round-6 tables —
     # Spark validates the spec against the existing table either way)
-    sort_cols = props.get(f"{prefix}.sort_cols")
+    sort_cols = props.get(sort_key)
     if sort_cols:
         writer = writer.sortBy(*sort_cols.split(",")).option(
             "parquet.block.size", str(INDEX_ROWGROUP_BYTES)
@@ -276,7 +369,7 @@ def append_to_bucketed_index(
         name,
         {
             f"{prefix}.applied_batches": ";".join(sorted(applied | {batch_fp})),
-            watermark_key: int(batch_max_id),
+            watermark_key: int(stat["hi"]),
         },
     )
     return {"status": "appended", "batch_fp": batch_fp, "table": name}
@@ -284,7 +377,7 @@ def append_to_bucketed_index(
 
 def compact_bucketed_index(spark: SparkSession, name: str, prefix: str) -> dict:
     """Rewrite a bucketed index table DISTINCT — the repair for the
-    append crash window documented on ``append_to_bucketed_index``
+    append crash window documented on ``append_index_batch``
     (duplicate rows from a retried append whose receipt was lost).
     The distinct rows are staged to a fresh generation directory
     through the RECORDED bucket/sort spec, the table is re-registered
@@ -295,11 +388,7 @@ def compact_bucketed_index(spark: SparkSession, name: str, prefix: str) -> dict:
     handshake) survive the rewrite; verdicts are unchanged because the
     index was always consumed with set semantics."""
     props = get_table_properties(spark, name)
-    path_key, nb_key, cols_key = (
-        f"{prefix}.path",
-        f"{prefix}.n_storage_buckets",
-        f"{prefix}.bucket_cols",
-    )
+    path_key, nb_key, cols_key, sort_key = _manifest_keys(prefix)
     missing = [k for k in (path_key, nb_key, cols_key) if k not in props]
     if missing:
         raise ValueError(
@@ -320,7 +409,7 @@ def compact_bucketed_index(spark: SparkSession, name: str, prefix: str) -> dict:
     # not be truncated — round-6 review)
     base_path = props.get(f"{prefix}.base_path", old_path)
     new_path = f"{base_path}__cgen{gen}"
-    sort_cols = props.get(f"{prefix}.sort_cols")
+    sort_cols = props.get(sort_key)
     write_bucketed_table(
         rows,
         name,
@@ -376,7 +465,10 @@ def check_index_params(
     by an older version of this library, or by hand) gets a dedicated
     error — its guarantees cannot be checked (same policy as the
     old-layout checkpoint manifest)."""
-    props = get_table_properties(spark, name)
+    return _check_params(get_table_properties(spark, name), name, expected, kind)
+
+
+def _check_params(props: dict, name: str, expected: dict, kind: str) -> dict:
     missing = [k for k in expected if k not in props]
     if missing:
         raise ValueError(

@@ -338,6 +338,12 @@ def read_transcripts(spark: SparkSession, path: str, fmt: str = "parquet") -> Da
     raise ValueError(f"unsupported transcript format: {fmt}")
 
 
+def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` table of a scale-factor directory — the one
+    reader every corpus operator uses."""
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
 def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adapter: the driver-generated ``documents`` table as a transcript
     corpus — ``source`` becomes the conversation, a deterministic
@@ -345,7 +351,7 @@ def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline run against /root/testdata without synthesizing input."""
     from pyspark.sql import Window as W
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     w = W.partitionBy("source").orderBy("doc_id")
     return docs.select(
         F.col("source").alias("conv_id"),

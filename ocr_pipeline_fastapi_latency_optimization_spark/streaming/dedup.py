@@ -17,6 +17,8 @@ stream is exactly the document the batch index would have flagged.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
 from ..functions.textstats import fingerprint
@@ -119,19 +121,16 @@ def streaming_semantic_candidates(
 
     from ..operators.embedding import (
         EMBED_DIM,
-        TEXT_LSH_SEED,
+        TEXT_PARAMS,
         _CENTER,
         _embed_consts,
-        _index_family,
+        _text_family,
         require_text_center,
     )
     from ..sources.catalog import check_index_params
 
-    props = check_index_params(
-        spark, index_table, {"cosine.seed": TEXT_LSH_SEED}, kind="cosine"
-    )
-    planes_list, n_bands = _index_family(props)
-    require_text_center(props, index_table)
+    props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
+    planes_list, n_bands = _text_family(props, index_table, require_text_center)
     center_n = max(1, int(props["text.center_n"]))
     center_t = [int(x) for x in props["text.center_t"].split(",")]
 
@@ -224,6 +223,32 @@ def streaming_semantic_candidates(
     )
 
 
+def verdict_stream(
+    docs_stream: DataFrame,
+    out_path: str,
+    kernel: Callable[[DataFrame], DataFrame],
+):
+    """The ``foreachBatch`` loop every in-stream verdict tier shares:
+    each non-empty micro-batch's ``(doc_id, text)`` goes through the
+    batch ``kernel`` and its verdicts overwrite
+    ``out_path/batch_id=<id>``. foreachBatch is at-least-once: a retry
+    re-invokes the handler with the SAME batch_id after a crash between
+    write and checkpoint commit, so overwriting the batch's own
+    partition directory makes the replay idempotent (a plain append
+    would double-count verdicts downstream); readers get batch_id back
+    as the partition column. Returns the ``DataStreamWriter``."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.select("doc_id", "text")
+        if batch.isEmpty():
+            return
+        kernel(batch).write.mode("overwrite").parquet(
+            f"{out_path}/batch_id={int(batch_id)}"
+        )
+
+    return docs_stream.writeStream.foreachBatch(handle)
+
+
 def streaming_semantic_verdicts(
     spark,
     docs_stream: DataFrame,
@@ -253,25 +278,13 @@ def streaming_semantic_verdicts(
     )
 
     thr = TEXT_NEAR_DUP_THRESHOLD_E6 if threshold_e6 is None else threshold_e6
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("doc_id", "text")
-        if batch.isEmpty():
-            return
-        verdicts = text_semantic_verdicts_for_batch(
+    return verdict_stream(
+        docs_stream,
+        out_path,
+        lambda batch: text_semantic_verdicts_for_batch(
             spark, batch, index_table, corpus_docs, threshold_e6=thr
-        )
-        # foreachBatch is at-least-once: a retry re-invokes this handler
-        # with the SAME batch_id after a crash between write and
-        # checkpoint commit. Overwriting the batch's own partition
-        # directory makes the replay idempotent (a plain append would
-        # double-count verdicts downstream — round-6 review #2);
-        # readers get batch_id back as the partition column.
-        verdicts.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={int(batch_id)}"
-        )
-
-    return docs_stream.writeStream.foreachBatch(handle)
+        ),
+    )
 
 
 def streaming_minhash_verdicts(
@@ -305,18 +318,13 @@ def streaming_minhash_verdicts(
     ``.start()``s it."""
     from ..operators.dedup import minhash_verified_verdicts_for_batch
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("doc_id", "text")
-        if batch.isEmpty():
-            return
-        verdicts = minhash_verified_verdicts_for_batch(
+    return verdict_stream(
+        docs_stream,
+        out_path,
+        lambda batch: minhash_verified_verdicts_for_batch(
             spark, batch, index_table, corpus_docs
-        )
-        verdicts.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={int(batch_id)}"
-        )
-
-    return docs_stream.writeStream.foreachBatch(handle)
+        ),
+    )
 
 
 def streaming_clustered_verdicts(
@@ -348,19 +356,13 @@ def streaming_clustered_verdicts(
     )
 
     thr = TEXT_NEAR_DUP_THRESHOLD_E6 if threshold_e6 is None else threshold_e6
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("doc_id", "text")
-        if batch.isEmpty():
-            return
-        verdicts = text_clustered_verdicts_for_batch(
+    return verdict_stream(
+        docs_stream,
+        out_path,
+        lambda batch: text_clustered_verdicts_for_batch(
             spark, batch, index_table, corpus_docs, threshold_e6=thr
-        )
-        verdicts.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={int(batch_id)}"
-        )
-
-    return docs_stream.writeStream.foreachBatch(handle)
+        ),
+    )
 
 
 def streaming_bloom_verdicts(
@@ -389,13 +391,8 @@ def streaming_bloom_verdicts(
     ``.start()``s it."""
     from ..operators.dedup import bloom_verdicts_for_batch
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("doc_id", "text")
-        if batch.isEmpty():
-            return
-        verdicts = bloom_verdicts_for_batch(spark, batch, index_table)
-        verdicts.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={int(batch_id)}"
-        )
-
-    return docs_stream.writeStream.foreachBatch(handle)
+    return verdict_stream(
+        docs_stream,
+        out_path,
+        lambda batch: bloom_verdicts_for_batch(spark, batch, index_table),
+    )

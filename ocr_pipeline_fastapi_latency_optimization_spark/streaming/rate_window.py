@@ -93,54 +93,6 @@ def streaming_conv_progress(transcripts_stream: DataFrame) -> DataFrame:
     )
 
 
-def streaming_conv_progress_tws(transcripts_stream: DataFrame) -> DataFrame:
-    """Spark-4-native twin of ``streaming_conv_progress`` on the
-    ``transformWithStateInPandas`` StatefulProcessor API (typed
-    ValueState instead of a raw tuple; the successor API Spark
-    recommends for new custom stateful operators). Requires the RocksDB
-    state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``...state.RocksDBStateStoreProvider``) — the caller/test sets it;
-    HDFS-backed stores do not support transformWithState."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ConvProgress(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "progress", "n_turns long, chars_seen long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n_turns, chars = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n_turns += len(pdf)
-                chars += int(pdf["text"].fillna("").str.len().sum())
-            self._state.update((n_turns, chars))
-            yield pd.DataFrame(
-                {"conv_id": [key[0]], "n_turns": [n_turns], "chars_seen": [chars]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        transcripts_stream.select("conv_id", "text")
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            statefulProcessor=ConvProgress(),
-            outputStructType="conv_id string, n_turns long, chars_seen long",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def streaming_extract(transcripts_stream: DataFrame, merge_visual: bool = False) -> DataFrame:
     """The per-turn extract stage on a stream. The stage is stateless and
     narrow, so it runs unchanged under micro-batch execution; the

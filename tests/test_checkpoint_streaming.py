@@ -548,82 +548,6 @@ def test_streaming_stateful_progress_across_batches(spark, tmp_path):
     assert len(out) >= 2  # state emitted once per triggering batch
 
 
-def test_streaming_stateful_progress_tws_matches_legacy_api(spark, tmp_path):
-    """The Spark-4 transformWithStateInPandas StatefulProcessor must
-    carry identical state across micro-batches as the legacy
-    applyInPandasWithState operator (typed ValueState, RocksDB store).
-    Skipped only if this build lacks the RocksDB provider."""
-    import pandas as pd
-
-    from ocr_pipeline_fastapi_latency_optimization_spark.schema import (
-        TRANSCRIPTS_SCHEMA,
-    )
-    from ocr_pipeline_fastapi_latency_optimization_spark.streaming.rate_window import (
-        streaming_conv_progress_tws,
-    )
-
-    src = tmp_path / "tws_src"
-    src.mkdir()
-
-    def batch(path, texts):
-        pdf = pd.DataFrame(
-            {
-                "conv_id": ["c0"] * len(texts),
-                "turn_idx": list(range(len(texts))),
-                "role": ["user"] * len(texts),
-                "text": texts,
-                "tool": [None] * len(texts),
-                "ts": [None] * len(texts),
-            }
-        )
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-
-    batch(str(src / "f1"), ["aaaa", "bb"])
-    batch(str(src / "f2"), ["cccccc"])
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        old_provider = spark.conf.get(provider_key)
-    except Exception:
-        old_provider = None
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    try:
-        q = (
-            streaming_conv_progress_tws(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    except Exception as exc:  # pragma: no cover - env-dependent
-        pytest.skip(f"transformWithState unavailable in this build: {exc}")
-    finally:
-        if old_provider is not None:
-            spark.conf.set(provider_key, old_provider)
-        else:
-            spark.conf.unset(provider_key)
-    out = spark.sql(f"SELECT * FROM {name}").toPandas()
-    # cumulative across batches, same as the legacy-API test: the final
-    # emission sees all 3 turns / 12 chars
-    assert out["n_turns"].max() == 3
-    assert out["chars_seen"].max() == 12
-    assert len(out) >= 2
-
-
 def test_streaming_restart_processes_only_new_files(spark, tmp_path, corpus):
     """Exactly-once continuous ingestion: a file-source stream with a
     checkpointLocation, stopped and restarted after new data lands,

@@ -5,6 +5,9 @@ import pandas as pd
 import pytest
 
 from ocr_pipeline_fastapi_latency_optimization_spark.operators import curation
+from ocr_pipeline_fastapi_latency_optimization_spark.sources.transcripts import (
+    read_documents,
+)
 
 
 @pytest.fixture()
@@ -90,12 +93,12 @@ def test_hash_sample_deterministic_and_stratified(spark):
     b = (
         curation.stratified_hash_sample(
             spark, sf,
-            docs=curation._docs(spark, sf).repartition(13),
+            docs=read_documents(spark, sf).repartition(13),
         )
         .toPandas()
     )
     assert sorted(a["doc_id"]) == sorted(b["doc_id"])
-    docs = curation._docs(spark, sf).groupBy("lang").count().toPandas()
+    docs = read_documents(spark, sf).groupBy("lang").count().toPandas()
     totals = dict(zip(docs["lang"], docs["count"]))
     got = a.groupby("lang").size().to_dict()
     for lang, rate in (("en", 0.5), ("de", 0.25)):
@@ -111,7 +114,7 @@ def test_dataset_split_stable_under_corpus_growth(spark):
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.01"
-    full = curation._docs(spark, sf)
+    full = read_documents(spark, sf)
     half = full.filter(F.col("doc_id") < 250)
 
     def assign(docs):

@@ -13,19 +13,6 @@ SF_DIR = "/root/testdata/sf0.001"
 SF_01 = "/root/testdata/sf0.01"
 
 
-def test_minhash_matches_python_oracle(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(40)
-    sig = dedup.minhash_signatures(docs, n_perms=8, hash_fn="md5").toPandas()
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in docs.select("doc_id", "text").collect()
-    }
-    for _, row in sig.iterrows():
-        want = dedup.minhash_signature_py(texts[row["doc_id"]], n_perms=8)
-        got = [row[f"h{p}"] for p in range(8)]
-        assert got == want, f"doc {row['doc_id']}"
-
-
 def test_simhash_matches_python_oracle(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(40)
     sig = dedup.simhash_signatures(spark, SF_DIR).toPandas().head(40)
@@ -90,6 +77,15 @@ def test_minhash_affine_matches_python_oracle(spark):
         want = dedup.minhash_signature_affine_py(texts[row["doc_id"]], n_perms=8)
         got = [row[f"h{p}"] for p in range(8)]
         assert got == want, f"doc {row['doc_id']}"
+
+
+def test_minhash_rejects_unknown_hash_fn(spark):
+    """Only the affine family exists: a removed per-permutation variant
+    name fails loudly instead of silently hashing another way."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    for fn in ("md5", "xxhash64"):
+        with pytest.raises(ValueError, match="unknown MinHash hash_fn"):
+            dedup.minhash_signatures(docs, n_perms=8, hash_fn=fn)
 
 
 def test_affine_variant_finds_planted(spark, planted):
@@ -215,13 +211,58 @@ def test_similarity_corpus_path_never_materializes_on_driver():
         assert ".toPandas()" not in src, fn.__name__
         for m in __import__("re").finditer(r"\.collect\(\)", src):
             assert ".agg(" in src[: m.start()], fn.__name__
-    # persist_ivf_index collects exactly the K-row centroid frame plus
-    # the 1-row watermark aggregate — never assignments
+    # their watermark and batch-fingerprint collects run in the shared
+    # index core: there, EVERY collect is a one-row aggregate — the
+    # receiver is an .agg(...) call and only row [0] is read
+    import ast
+    import textwrap
+
+    from ocr_pipeline_fastapi_latency_optimization_spark.sources import catalog
+
+    for fn, n_collects in (
+        (catalog.persist_index, 1),
+        (catalog.append_index_batch, 1),
+    ):
+        src = inspect.getsource(fn)
+        assert ".toPandas()" not in src, fn.__name__
+        tree = ast.parse(textwrap.dedent(src))
+        collects = [
+            node
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("collect", "take", "head", "first")
+        ]
+        assert len(collects) == n_collects, fn.__name__
+        row0 = {
+            id(node.value)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Subscript)
+            and isinstance(node.slice, ast.Constant)
+            and node.slice.value == 0
+        }
+        for call in collects:
+            recv = call.func.value
+            assert isinstance(recv, ast.Call), fn.__name__
+            assert isinstance(recv.func, ast.Attribute), fn.__name__
+            assert recv.func.attr == "agg", fn.__name__
+            grouped = recv.func.value  # a global agg, not groupBy().agg
+            assert not (
+                isinstance(grouped, ast.Call)
+                and getattr(grouped.func, "attr", "") in ("groupBy", "rollup", "cube")
+            ), fn.__name__
+            assert id(call) in row0, fn.__name__
+    # the persist watermark is max(id) — one row, never the index rows
+    src = inspect.getsource(catalog.persist_index)
+    assert __import__("re").findall(r"(\w+(?:\(.*?\))?)\.collect\(\)", src) == [
+        'agg(F.max(family.id_col).alias("m"))',
+    ], src
+    # persist_ivf_index collects exactly the K-row centroid frame —
+    # never assignments (its 1-row watermark aggregate is the core's)
     src = inspect.getsource(similarity.persist_ivf_index)
     assert ".toPandas()" not in src
     assert __import__("re").findall(r"(\w+(?:\(.*?\))?)\.collect\(\)", src) == [
         "cents",
-        'agg(F.max("vec_id").alias("m"))',
     ], src
     # full-table broadcast hints are equally banned on corpus-sized sides
     for fn in (similarity.near_dup_pairs_cosine, similarity.cosine_lsh_pairs):
@@ -560,13 +601,6 @@ def test_approx_stats_sane(spark):
     # GK sketch at accuracy 10000 over sf0.01 (~10^4 rows) is near-exact:
     # allow a 1% relative band around the exact median
     assert abs(row["q50_e4"] - ex) <= max(abs(ex) * 0.01, 1000)
-
-
-def test_xxhash_variant_runs(spark, planted):
-    pairs = dedup.minhash_lsh_pairs(
-        spark, planted, n_perms=16, bands=4, hash_fn="xxhash64"
-    ).toPandas()
-    assert (0, 1) in set(zip(pairs["doc_a"], pairs["doc_b"]))
 
 
 def test_persisted_lsh_index_probe_is_shuffle_free_on_index_side(spark, tmp_path):
@@ -1001,7 +1035,7 @@ def test_index_param_handshake_fails_fast(spark, tmp_path):
         # mismatched hash_fn
         with pytest.raises(ValueError, match="different\\s+parameters"):
             dedup.incremental_minhash_dedup(
-                spark, SF_DIR, n_perms=16, bands=4, hash_fn="xxhash64",
+                spark, SF_DIR, n_perms=16, bands=4, hash_fn="affine",
                 index_table="t_lsh_idx_p",
             )
         # a table NOT written by persist_minhash_index records no params
