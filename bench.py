@@ -85,7 +85,23 @@ def control_rate(workers: int, reps: int = 3) -> float:
     return sum(counts) / wall
 
 
-def main() -> None:
+def ensure_corpus(spark) -> None:
+    """Generate the synthetic transcript corpus once (cached on disk)."""
+    from ocr_pipeline_fastapi_latency_optimization_spark.sources.transcripts import (
+        gen_transcripts_spark,
+    )
+
+    if not os.path.exists(os.path.join(CORPUS_DIR, "_SUCCESS")):
+        gen_transcripts_spark(
+            spark, BENCH_CONVS, MEAN_TURNS, seed=SEED, partitions=CPUS * 2
+        ).write.mode("overwrite").parquet(CORPUS_DIR)
+
+
+def query_builders(spark, corpus) -> dict:
+    """The bench query registry: name -> zero-arg builder of the
+    DataFrame that key times, in bench order (``bench_extra.py`` reads
+    the same registry). Materializes the per-turn extraction output the
+    stitch query reads, once per corpus and untimed."""
     from pyspark.sql import functions as F
 
     from ocr_pipeline_fastapi_latency_optimization_spark.functions.textstats import (
@@ -96,18 +112,133 @@ def main() -> None:
         token_count,
     )
     from ocr_pipeline_fastapi_latency_optimization_spark.operators import (
+        chunking,
+        curation,
         dedup,
+        embedding,
         maintenance,
         similarity,
+        sketches,
     )
     from ocr_pipeline_fastapi_latency_optimization_spark.operators.extraction import (
+        blocks_table,
         extract_pipeline,
         stitch_conversations_salted,
     )
-    from ocr_pipeline_fastapi_latency_optimization_spark.session import get_spark
     from ocr_pipeline_fastapi_latency_optimization_spark.sources.transcripts import (
         documents_as_transcripts,
-        gen_transcripts_spark,
+    )
+
+    # skew-safe stitch input: materialized per-turn output, so the
+    # stitch timing is the stitch, not re-extraction
+    per_turn_dir = f"{CORPUS_DIR}_per_turn"
+    if not os.path.exists(os.path.join(per_turn_dir, "_SUCCESS")):
+        extract_pipeline(corpus).write.mode("overwrite").parquet(per_turn_dir)
+    per_turn = spark.read.parquet(per_turn_dir)
+
+    # text analysis single-pass over documents
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    stats = docs.select(
+        "doc_id",
+        token_count(F.col("text")).alias("n_tok"),
+        bpe_ish_token_count(F.col("text")).alias("n_bpe"),
+        quality_score_e4(F.col("text")).alias("q"),
+        lang_id(F.col("text")).alias("lang"),
+        fingerprint(F.col("text")).alias("fp"),
+    )
+
+    def sem_decon():
+        # every 13th doc suffix-planted as a paraphrase-analog eval doc
+        # (same construction as the driver wrapper), probed against the
+        # full corpus
+        d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        ev = d.filter(F.col("doc_id") % 13 == 0).select(
+            "doc_id",
+            F.concat(F.col("text"), F.lit(" heldout benchmark answer")).alias(
+                "text"
+            ),
+        )
+        return curation.semantic_decontaminate(spark, SF_DIR, eval_docs=ev)
+
+    return {
+        # headline: full per-turn extraction (fused single-stage plan —
+        # zero shuffles); the JN1 join-shaped plan runs the extract
+        # stage once per join side
+        "extract_transcripts": lambda: extract_pipeline(corpus),
+        "extract_join_mode": lambda: extract_pipeline(corpus, mode="join"),
+        "extract_documents": lambda: extract_pipeline(
+            documents_as_transcripts(spark, SF_DIR)
+        ),
+        "stitch_salted": lambda: stitch_conversations_salted(per_turn),
+        # dedup: minhash LSH (fast JVM hash) + exact groups
+        "dedup_minhash_lsh": lambda: dedup.minhash_lsh_pairs(
+            spark, SF_DIR, hash_fn="affine"
+        ),
+        "dedup_exact": lambda: dedup.exact_duplicate_groups(spark, SF_DIR),
+        "verified_near_dedup": lambda: dedup.verified_near_dedup(spark, SF_DIR),
+        "knn_ivf": lambda: similarity.ivf_knn(spark, SF_DIR),
+        "textstats": lambda: stats,
+        # curation: PII masking (narrow regex), C4 boilerplate removal,
+        # the two-pass percentile quality gate, and the end-to-end
+        # funnel (extract → quality → lang → dedup → split) as ONE plan
+        "pii_mask": lambda: curation.pii_mask(spark, SF_DIR),
+        "boilerplate_lines": lambda: curation.boilerplate_lines(spark, SF_DIR),
+        "quality_threshold_filter": lambda: curation.quality_threshold_filter(
+            spark, SF_DIR
+        ),
+        "curation_funnel_full": lambda: curation.curation_funnel_full(
+            spark, SF_DIR
+        ),
+        # text→embedding and the closed extract→embed→dedup loop over
+        # the corpus's OWN text: global, per-source and k-means-derived
+        # (anchored soft-2) domains
+        "embed_documents": lambda: embedding.embed_documents(spark, SF_DIR),
+        "semantic_text_dedup": lambda: embedding.semantic_dedup_text_corpus(
+            spark, SF_DIR
+        ),
+        "semantic_text_dedup_domain": lambda: (
+            embedding.semantic_dedup_text_by_domain(spark, SF_DIR)
+        ),
+        "semantic_text_dedup_clustered": lambda: (
+            embedding.semantic_dedup_text_clustered(spark, SF_DIR)
+        ),
+        # CCNet-style head/middle/tail LM-score bucketing
+        "ccnet_perplexity_buckets": lambda: curation.ccnet_perplexity_buckets(
+            spark, SF_DIR
+        ),
+        "semantic_decontaminate": sem_decon,
+        # span-level substring dedup, the bigram-LM quality scorer,
+        # winnowing overlap, bloom membership and content-defined chunks
+        "substring_span_dedup": lambda: dedup.substring_span_dedup(spark, SF_DIR),
+        "lm_bigram_score": lambda: curation.lm_bigram_score(spark, SF_DIR),
+        "winnowing_overlap": lambda: dedup.winnowing_overlap(spark, SF_DIR),
+        "incremental_winnowing": lambda: dedup.incremental_winnowing_overlap(
+            spark, SF_DIR
+        ),
+        "bloom_dedup_probe": lambda: dedup.bloom_dedup_probe(spark, SF_DIR),
+        "cdc_chunks": lambda: chunking.cdc_chunks(spark, SF_DIR),
+        # fixed-size sketches: constant-state heavy hitters + cardinality
+        "cms_token_counts": lambda: sketches.cms_token_counts(spark, SF_DIR),
+        "hll_register_sketch": lambda: sketches.hll_register_sketch(
+            spark, SF_DIR
+        ),
+        # similarity scale path + block inspection
+        "cosine_lsh": lambda: similarity.cosine_lsh_pairs(spark, SF_DIR),
+        "blocks_table": lambda: blocks_table(
+            documents_as_transcripts(spark, SF_DIR)
+        ),
+        # maintenance shapes over events
+        "rate_window": lambda: maintenance.rate_window(spark, SF_DIR),
+        "top_k_recent": lambda: maintenance.top_k_recent(spark, SF_DIR),
+    }
+
+
+def main() -> None:
+    from ocr_pipeline_fastapi_latency_optimization_spark.operators.extraction import (
+        extract_pipeline,
+    )
+    from ocr_pipeline_fastapi_latency_optimization_spark.session import get_spark
+    from ocr_pipeline_fastapi_latency_optimization_spark.sources.transcripts import (
         read_transcripts,
     )
 
@@ -126,10 +257,7 @@ def main() -> None:
 
     # --- corpus (generated once, reused across rounds) ---
     t0 = time.time()
-    if not os.path.exists(os.path.join(CORPUS_DIR, "_SUCCESS")):
-        gen_transcripts_spark(
-            spark, BENCH_CONVS, MEAN_TURNS, seed=SEED, partitions=CPUS * 2
-        ).write.mode("overwrite").parquet(CORPUS_DIR)
+    ensure_corpus(spark)
     extras["corpus_gen_sec"] = round(time.time() - t0, 3)
     corpus = read_transcripts(spark, CORPUS_DIR)
     n_turns = corpus.count()
@@ -155,190 +283,15 @@ def main() -> None:
             runs.append(time.time() - t)
         timings[name] = round(sorted(runs)[len(runs) // 2], 3)
 
-    # 1. headline: full per-turn extraction over the transcript corpus
-    # (fused single-stage plan — zero shuffles)
-    timed("extract_transcripts", lambda: _force(extract_pipeline(corpus)))
-    extras["turns_per_sec"] = round(n_turns / timings["extract_transcripts"], 1)
-    # host-independent ratio: Spark extraction rate / no-Spark control
-    # rate measured in the same session (see control_rate above)
-    extras["turns_per_sec_normalized"] = round(
-        extras["turns_per_sec"] / extras["control_turns_per_sec"], 4
-    )
-
-    # 1b. the explicit JN1 join-shaped plan, for comparison (runs the
-    # extract stage twice — one per join side; see operators/extraction.py)
-    timed(
-        "extract_join_mode", lambda: _force(extract_pipeline(corpus, mode="join"))
-    )
-
-    # 2. extraction over the driver documents table
-    timed(
-        "extract_documents",
-        lambda: _force(extract_pipeline(documents_as_transcripts(spark, SF_DIR))),
-    )
-
-    # 3. skew-safe conversation stitch over materialized per-turn output
-    # (untimed write so the stitch timing is the stitch, not re-extraction)
-    per_turn_dir = f"{CORPUS_DIR}_per_turn"
-    if not os.path.exists(os.path.join(per_turn_dir, "_SUCCESS")):
-        extract_pipeline(corpus).write.mode("overwrite").parquet(per_turn_dir)
-    per_turn = spark.read.parquet(per_turn_dir)
-    timed("stitch_salted", lambda: _force(stitch_conversations_salted(per_turn)))
-
-    # 4. dedup: minhash LSH (fast JVM hash) + exact groups
-    timed(
-        "dedup_minhash_lsh",
-        lambda: _force(
-            dedup.minhash_lsh_pairs(spark, SF_DIR, hash_fn="affine")
-        ),
-    )
-    timed("dedup_exact", lambda: _force(dedup.exact_duplicate_groups(spark, SF_DIR)))
-    timed(
-        "verified_near_dedup",
-        lambda: _force(dedup.verified_near_dedup(spark, SF_DIR)),
-    )
-
-    # 5. similarity: IVF ANN over embeddings
-    timed("knn_ivf", lambda: _force(similarity.ivf_knn(spark, SF_DIR)))
-
-    # 6. text analysis single-pass over documents
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    stats = docs.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tok"),
-        bpe_ish_token_count(F.col("text")).alias("n_bpe"),
-        quality_score_e4(F.col("text")).alias("q"),
-        lang_id(F.col("text")).alias("lang"),
-        fingerprint(F.col("text")).alias("fp"),
-    )
-    timed("textstats", lambda: _force(stats))
-
-    # 6b. curation pass: PII masking (narrow regex) + C4 boilerplate
-    # removal (corpus line-frequency agg + anti-join)
-    from ocr_pipeline_fastapi_latency_optimization_spark.operators import curation
-
-    timed("pii_mask", lambda: _force(curation.pii_mask(spark, SF_DIR)))
-    timed(
-        "boilerplate_lines",
-        lambda: _force(curation.boilerplate_lines(spark, SF_DIR)),
-    )
-    # two-pass histogram percentile cut — the scale-default quality gate
-    timed(
-        "quality_threshold_filter",
-        lambda: _force(curation.quality_threshold_filter(spark, SF_DIR)),
-    )
-    # 6c. the end-to-end funnel a real curation run executes, as ONE plan:
-    # extract → quality gate → lang gate → dedup survivors → hash split
-    timed(
-        "curation_funnel_full",
-        lambda: _force(curation.curation_funnel_full(spark, SF_DIR)),
-    )
-
-    # 6d. text→embedding generation + the closed extract→embed→dedup
-    # loop over the corpus's OWN text (round-5 additions)
-    from ocr_pipeline_fastapi_latency_optimization_spark.operators import embedding
-
-    timed(
-        "embed_documents",
-        lambda: _force(embedding.embed_documents(spark, SF_DIR)),
-    )
-    timed(
-        "semantic_text_dedup",
-        lambda: _force(embedding.semantic_dedup_text_corpus(spark, SF_DIR)),
-    )
-    # the round-6 multi-domain variant (per-source centers)
-    timed(
-        "semantic_text_dedup_domain",
-        lambda: _force(embedding.semantic_dedup_text_by_domain(spark, SF_DIR)),
-    )
-    # the round-7 UNLABELED variant (k-means-derived domains, anchored
-    # soft-2 membership — adds the training + assignment passes)
-    timed(
-        "semantic_text_dedup_clustered",
-        lambda: _force(embedding.semantic_dedup_text_clustered(spark, SF_DIR)),
-    )
-    # CCNet-style head/middle/tail LM-score bucketing (round-7)
-    timed(
-        "ccnet_perplexity_buckets",
-        lambda: _force(curation.ccnet_perplexity_buckets(spark, SF_DIR)),
-    )
-    # semantic eval-set decontamination: every 13th doc suffix-planted
-    # as a paraphrase-analog eval doc (same construction as the driver
-    # wrapper) probed against the full corpus
-    from pyspark.sql import functions as F
-
-    def _sem_decon():
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        ev = docs.filter(F.col("doc_id") % 13 == 0).select(
-            "doc_id",
-            F.concat(F.col("text"), F.lit(" heldout benchmark answer")).alias(
-                "text"
-            ),
-        )
-        return _force(curation.semantic_decontaminate(spark, SF_DIR, eval_docs=ev))
-
-    timed("semantic_decontaminate", _sem_decon)
-
-    # 6e. round-6 additions: span-level substring dedup (corpus-wide
-    # window hashing — the scan-heavy new dedup granularity) and the
-    # bigram-LM quality scorer (vocab-sized model joins)
-    timed(
-        "substring_span_dedup",
-        lambda: _force(dedup.substring_span_dedup(spark, SF_DIR)),
-    )
-    timed(
-        "lm_bigram_score",
-        lambda: _force(curation.lm_bigram_score(spark, SF_DIR)),
-    )
-    # winnowing pair overlap (fingerprint self-join), bloom membership
-    # probe (broadcast bitmap), content-defined chunking (narrow JVM)
-    timed(
-        "winnowing_overlap",
-        lambda: _force(dedup.winnowing_overlap(spark, SF_DIR)),
-    )
-    timed(
-        "incremental_winnowing",
-        lambda: _force(dedup.incremental_winnowing_overlap(spark, SF_DIR)),
-    )
-    timed(
-        "bloom_dedup_probe",
-        lambda: _force(dedup.bloom_dedup_probe(spark, SF_DIR)),
-    )
-    from ocr_pipeline_fastapi_latency_optimization_spark.operators import chunking
-
-    timed(
-        "cdc_chunks",
-        lambda: _force(chunking.cdc_chunks(spark, SF_DIR)),
-    )
-    # fixed-size sketches: constant-state heavy hitters + cardinality
-    from ocr_pipeline_fastapi_latency_optimization_spark.operators import sketches
-
-    timed(
-        "cms_token_counts",
-        lambda: _force(sketches.cms_token_counts(spark, SF_DIR)),
-    )
-    timed(
-        "hll_register_sketch",
-        lambda: _force(sketches.hll_register_sketch(spark, SF_DIR)),
-    )
-
-    # 7. similarity scale path + block inspection
-    timed(
-        "cosine_lsh",
-        lambda: _force(similarity.cosine_lsh_pairs(spark, SF_DIR)),
-    )
-    from ocr_pipeline_fastapi_latency_optimization_spark.operators.extraction import (
-        blocks_table,
-    )
-
-    timed(
-        "blocks_table",
-        lambda: _force(blocks_table(documents_as_transcripts(spark, SF_DIR))),
-    )
-
-    # 8. maintenance shapes over events
-    timed("rate_window", lambda: _force(maintenance.rate_window(spark, SF_DIR)))
-    timed("top_k_recent", lambda: _force(maintenance.top_k_recent(spark, SF_DIR)))
+    for name, build in query_builders(spark, corpus).items():
+        timed(name, lambda: _force(build()))
+        if name == "extract_transcripts":
+            extras["turns_per_sec"] = round(n_turns / timings[name], 1)
+            # host-independent ratio: Spark extraction rate / no-Spark
+            # control rate measured in the same session (control_rate)
+            extras["turns_per_sec_normalized"] = round(
+                extras["turns_per_sec"] / extras["control_turns_per_sec"], 4
+            )
 
     total = round(sum(timings.values()), 3)
     print(

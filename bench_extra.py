@@ -25,135 +25,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-BENCH_CONVS = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "12000"))
-MEAN_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_MEAN_TURNS", "12"))
-SEED = 42
-CORPUS_DIR = f"/tmp/spark_graft_bench_corpus_c{BENCH_CONVS}_m{MEAN_TURNS}_s{SEED}"
-
-
-def _force(df) -> int:
-    df.write.format("noop").mode("overwrite").save()
-    return 0
+from bench import CORPUS_DIR, CPUS, _force, ensure_corpus, query_builders
 
 
 def _builders(spark):
     """name -> zero-arg builder returning the DataFrame bench.py times."""
-    from pyspark.sql import functions as F
-
-    from ocr_pipeline_fastapi_latency_optimization_spark.functions.textstats import (
-        bpe_ish_token_count,
-        fingerprint,
-        lang_id,
-        quality_score_e4,
-        token_count,
-    )
-    from ocr_pipeline_fastapi_latency_optimization_spark.operators import (
-        chunking,
-        curation,
-        dedup,
-        embedding,
-        maintenance,
-        similarity,
-        sketches,
-    )
-    from ocr_pipeline_fastapi_latency_optimization_spark.operators.extraction import (
-        blocks_table,
-        extract_pipeline,
-        stitch_conversations_salted,
-    )
     from ocr_pipeline_fastapi_latency_optimization_spark.sources.transcripts import (
-        documents_as_transcripts,
-        gen_transcripts_spark,
         read_transcripts,
     )
 
-    if not os.path.exists(os.path.join(CORPUS_DIR, "_SUCCESS")):
-        gen_transcripts_spark(
-            spark, BENCH_CONVS, MEAN_TURNS, seed=SEED, partitions=CPUS * 2
-        ).write.mode("overwrite").parquet(CORPUS_DIR)
-    corpus = read_transcripts(spark, CORPUS_DIR)
-    per_turn_dir = f"{CORPUS_DIR}_per_turn"
-    if not os.path.exists(os.path.join(per_turn_dir, "_SUCCESS")):
-        extract_pipeline(corpus).write.mode("overwrite").parquet(per_turn_dir)
-    per_turn = spark.read.parquet(per_turn_dir)
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    stats = docs.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tok"),
-        bpe_ish_token_count(F.col("text")).alias("n_bpe"),
-        quality_score_e4(F.col("text")).alias("q"),
-        lang_id(F.col("text")).alias("lang"),
-        fingerprint(F.col("text")).alias("fp"),
-    )
-
-    def _sem_decon():
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        ev = d.filter(F.col("doc_id") % 13 == 0).select(
-            "doc_id",
-            F.concat(F.col("text"), F.lit(" heldout benchmark answer")).alias(
-                "text"
-            ),
-        )
-        return curation.semantic_decontaminate(spark, SF_DIR, eval_docs=ev)
-
-    return {
-        "extract_transcripts": lambda: extract_pipeline(corpus),
-        "extract_join_mode": lambda: extract_pipeline(corpus, mode="join"),
-        "extract_documents": lambda: extract_pipeline(
-            documents_as_transcripts(spark, SF_DIR)
-        ),
-        "stitch_salted": lambda: stitch_conversations_salted(per_turn),
-        "dedup_minhash_lsh": lambda: dedup.minhash_lsh_pairs(
-            spark, SF_DIR, hash_fn="affine"
-        ),
-        "dedup_exact": lambda: dedup.exact_duplicate_groups(spark, SF_DIR),
-        "verified_near_dedup": lambda: dedup.verified_near_dedup(spark, SF_DIR),
-        "knn_ivf": lambda: similarity.ivf_knn(spark, SF_DIR),
-        "textstats": lambda: stats,
-        "pii_mask": lambda: curation.pii_mask(spark, SF_DIR),
-        "boilerplate_lines": lambda: curation.boilerplate_lines(spark, SF_DIR),
-        "quality_threshold_filter": lambda: curation.quality_threshold_filter(
-            spark, SF_DIR
-        ),
-        "curation_funnel_full": lambda: curation.curation_funnel_full(
-            spark, SF_DIR
-        ),
-        "embed_documents": lambda: embedding.embed_documents(spark, SF_DIR),
-        "semantic_text_dedup": lambda: embedding.semantic_dedup_text_corpus(
-            spark, SF_DIR
-        ),
-        "semantic_text_dedup_domain": lambda: (
-            embedding.semantic_dedup_text_by_domain(spark, SF_DIR)
-        ),
-        "semantic_text_dedup_clustered": lambda: (
-            embedding.semantic_dedup_text_clustered(spark, SF_DIR)
-        ),
-        "ccnet_perplexity_buckets": lambda: curation.ccnet_perplexity_buckets(
-            spark, SF_DIR
-        ),
-        "semantic_decontaminate": _sem_decon,
-        "substring_span_dedup": lambda: dedup.substring_span_dedup(spark, SF_DIR),
-        "lm_bigram_score": lambda: curation.lm_bigram_score(spark, SF_DIR),
-        "winnowing_overlap": lambda: dedup.winnowing_overlap(spark, SF_DIR),
-        "incremental_winnowing": lambda: dedup.incremental_winnowing_overlap(
-            spark, SF_DIR
-        ),
-        "bloom_dedup_probe": lambda: dedup.bloom_dedup_probe(spark, SF_DIR),
-        "cdc_chunks": lambda: chunking.cdc_chunks(spark, SF_DIR),
-        "cms_token_counts": lambda: sketches.cms_token_counts(spark, SF_DIR),
-        "hll_register_sketch": lambda: sketches.hll_register_sketch(
-            spark, SF_DIR
-        ),
-        "cosine_lsh": lambda: similarity.cosine_lsh_pairs(spark, SF_DIR),
-        "blocks_table": lambda: blocks_table(
-            documents_as_transcripts(spark, SF_DIR)
-        ),
-        "rate_window": lambda: maintenance.rate_window(spark, SF_DIR),
-        "top_k_recent": lambda: maintenance.top_k_recent(spark, SF_DIR),
-    }
+    ensure_corpus(spark)
+    return query_builders(spark, read_transcripts(spark, CORPUS_DIR))
 
 
 def main() -> None:

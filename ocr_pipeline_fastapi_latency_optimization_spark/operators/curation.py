@@ -1202,15 +1202,11 @@ def semantic_decontaminate(
     the same documented divergence class as
     ``incremental_text_semantic_dedup``."""
     from .embedding import (
+        _TEXT_GLOBAL,
         TEXT_NEAR_DUP_THRESHOLD_E6,
-        TEXT_PARAMS,
-        _center_literals_frame,
         _sums_cosine_e6,
         _sums_with_norm,
-        _text_family,
-        centered_band_buckets,
         embed_sums,
-        require_text_center,
     )
 
     docs = docs if docs is not None else read_documents(spark, sf_dir)
@@ -1221,19 +1217,15 @@ def semantic_decontaminate(
     )
 
     if index_table is not None:
-        from ..sources.catalog import check_index_params, prune_index_scan
+        from ..sources.catalog import prune_index_scan
 
-        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
-        planes_list, bands = _text_family(props, index_table, require_text_center)
-        totals = _center_literals_frame(spark, props)
+        props = _TEXT_GLOBAL.open(spark, index_table)
         ev_sums = embed_sums(ev)
         # materialized once: the eval buckets feed the prune-key
         # collect AND the probe join (O(eval) rows). Lazy: the collect
         # is the materializing job — no separate eager pass (verdict #6)
         ev_bands = (
-            centered_band_buckets(
-                ev_sums, totals, planes_list=planes_list, bands=bands
-            )
+            _TEXT_GLOBAL.band_batch(spark, props, ev, ev_sums)
             .select(F.col("vec_id").alias("eval_vec"), "band", "key")
             .localCheckpoint(eager=False)
         )

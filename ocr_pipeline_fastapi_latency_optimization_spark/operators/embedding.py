@@ -39,6 +39,9 @@ scale-invariant, so no normalization is stored.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.catalog import (
@@ -121,11 +124,7 @@ def embed_documents_df(docs: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
     similarity operator consumes (same shape as embeddings.parquet with
     doc_id in the vec_id role). Doubles are exact images of the integer
     sums for any document under ~2²³ tokens."""
-    sums = embed_sums(docs, dim=dim)
-    arr = ", ".join(f"CAST(s{d} AS DOUBLE)" for d in range(dim))
-    return sums.select(
-        "doc_id", F.expr(f"array({arr})").alias("embedding")
-    )
+    return _sums_to_array(embed_sums(docs, dim=dim), dim)
 
 
 def embed_py(text: str, dim: int = EMBED_DIM):
@@ -418,17 +417,6 @@ def _index_family(props: dict):
     return _text_planes(n_planes), bands
 
 
-def _text_family(props: dict, table: str, *require) -> tuple:
-    """The recorded (planes_list, bands) of a text index whose
-    properties passed the ``TEXT_PARAMS`` handshake, after each
-    ``require(props, table)`` guard — the order every text probe and
-    append checks a persisted text index in."""
-    family = _index_family(props)
-    for guard in require:
-        guard(props, table)
-    return family
-
-
 # the text families' handshake: every probe and append adopts the
 # RECORDED planes/bands (_index_family), so only the plane stream's seed
 # is compared; persist records the family it sized (_text_params)
@@ -709,19 +697,12 @@ def append_to_text_cosine_index(
     the grown corpus would auto-size differently today), and delegates
     to the idempotent bucketed append (content-fp no-op on replay,
     monotone doc_id watermark)."""
-
-    def rows_for(props):
-        planes_list, bands = _index_family(props)
-        return centered_band_buckets(
-            embed_sums(docs_batch),
-            _center_literals_frame(spark, props),
-            planes_list=planes_list,
-            bands=bands,
-        )
-
     return append_index_batch(
-        spark, TEXT_INDEX, index_table, docs_batch, TEXT_PARAMS, rows_for,
-        check=lambda props, t: _text_family(props, t, require_text_center),
+        spark, TEXT_INDEX, index_table, docs_batch, TEXT_PARAMS,
+        lambda props: _TEXT_GLOBAL.band_batch(
+            spark, props, docs_batch, embed_sums(docs_batch)
+        ),
+        check=_TEXT_GLOBAL.check,
     )
 
 
@@ -833,12 +814,8 @@ def append_to_text_domain_index(
     ``new``); rebuild the index or route new domains elsewhere."""
 
     def rows_for(props):
-        planes_list, bands = _index_family(props)
-        batch_dom = docs_batch.select(
-            "doc_id",
-            F.col(props.get("text.domain_col", "source")).alias("domain"),
-        )
-        unseen = _unseen_domains(props, batch_dom.select("domain"))
+        col = props.get("text.domain_col", "source")
+        unseen = _unseen_domains(props, docs_batch.select(F.col(col).alias("domain")))
         if unseen:
             raise ValueError(
                 f"append to {index_table}: batch contains domains with no "
@@ -847,16 +824,11 @@ def append_to_text_domain_index(
                 "unindexed. Rebuild the index over the grown domain set or "
                 "route new domains to a separate index."
             )
-        return domain_centered_band_buckets(
-            embed_sums(docs_batch).join(batch_dom, "doc_id"),
-            totals_dom=_domain_center_frame(spark, props),
-            planes_list=planes_list,
-            bands=bands,
-        )
+        return _TEXT_DOMAIN.band_batch(spark, props, docs_batch, embed_sums(docs_batch))
 
     return append_index_batch(
         spark, TEXT_DOMAIN_INDEX, index_table, docs_batch, TEXT_PARAMS, rows_for,
-        check=lambda props, t: _text_family(props, t, require_domain_centers),
+        check=_TEXT_DOMAIN.check,
     )
 
 
@@ -885,90 +857,37 @@ def incremental_text_domain_dedup(
 
     boundary = INGEST_BOUNDARY if boundary is None else boundary
     docs = read_documents(spark, sf_dir)
+    new_docs = docs.filter(F.col("doc_id") >= boundary)
     if index_table is not None:
-
-        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
-        planes_list, bands = _text_family(props, index_table, require_domain_centers)
         # the index's RECORDED domain column is the authority (the
         # centers are keyed by ITS values — probing on a different
         # column would silently match no center and report everything
         # 'new'; round-6 review #1). The caller's domain_col applies
         # only to the split path.
-        domain_col = props.get("text.domain_col", domain_col)
-        totals = _domain_center_frame(spark, props)
-        new_docs = docs.filter(F.col("doc_id") >= boundary)
-        new_sums = embed_sums(new_docs)
-        new_sums_dom = new_sums.join(
-            new_docs.select("doc_id", F.col(domain_col).alias("domain")),
-            "doc_id",
+        return _text_index_verdicts(
+            spark, _TEXT_DOMAIN, new_docs, index_table, docs, threshold_e6,
+            boundary=boundary,
         )
-        # lazy: the prune-key collect is the materializing job (verdict #6)
-        new = domain_centered_band_buckets(
-            new_sums_dom, totals_dom=totals, planes_list=planes_list,
-            bands=bands,
-        ).localCheckpoint(eager=False)
-        existing = prune_index_scan(spark.table(index_table), new).filter(
-            F.col("vec_id") < boundary
-        )
-        sums_all = None
-    else:
-        sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
-        sums_dom = sums.join(
-            docs.select("doc_id", F.col(domain_col).alias("domain")), "doc_id"
-        )
-        existing_dom = sums_dom.filter(F.col("doc_id") < boundary)
-        totals_rows = domain_totals(existing_dom).collect()
-        n_max = max((int(r["n"]) for r in totals_rows), default=0)
-        totals = _domain_center_frame(
-            spark, {"text.domain_centers": _domain_centers_json(totals_rows)}
-        )
-        planes_list, bands = _resolve_text_family(None, None, n_max)
-        buckets = domain_centered_band_buckets(
-            sums_dom, totals_dom=totals, planes_list=planes_list, bands=bands
-        )
-        existing = buckets.filter(F.col("vec_id") < boundary)
-        new = buckets.filter(F.col("vec_id") >= boundary)
-        sums_all = sums
-    pairs = (
-        new.join(
-            existing.select(
-                F.col("vec_id").alias("evec"), "domain", "band", "key"
-            ),
-            ["domain", "band", "key"],
-        )
-        .select("vec_id", "evec")
-        .distinct()
+    sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
+    sums_dom = sums.join(
+        docs.select("doc_id", F.col(domain_col).alias("domain")), "doc_id"
     )
-    if sums_all is None:
-        cand_ids = pairs.select(F.col("evec").alias("doc_id")).distinct()
-        na_sums = new_sums
-        ne_sums = embed_sums(docs.join(cand_ids, "doc_id", "left_semi"))
-    else:
-        na_sums = ne_sums = sums_all
-    na = _sums_with_norm(na_sums).alias("na")
-    ne = _sums_with_norm(ne_sums).alias("ne")
-    scored = (
-        pairs.join(na, F.col("vec_id") == F.col("na.doc_id"))
-        .join(ne, F.col("evec") == F.col("ne.doc_id"))
-        .select("vec_id", _sums_cosine_e6("na", "ne").alias("score_e6"))
+    existing_dom = sums_dom.filter(F.col("doc_id") < boundary)
+    totals_rows = domain_totals(existing_dom).collect()
+    n_max = max((int(r["n"]) for r in totals_rows), default=0)
+    totals = _domain_center_frame(
+        spark, {"text.domain_centers": _domain_centers_json(totals_rows)}
     )
-    dups = (
-        scored.filter(F.col("score_e6") >= threshold_e6)
-        .select("vec_id")
-        .distinct()
-        .select("vec_id", F.lit("near_dup").alias("verdict"))
+    planes_list, bands = _resolve_text_family(None, None, n_max)
+    buckets = domain_centered_band_buckets(
+        sums_dom, totals_dom=totals, planes_list=planes_list, bands=bands
     )
-    all_new = docs.filter(F.col("doc_id") >= boundary).select(
-        F.col("doc_id").alias("vec_id")
+    pairs = _band_pairs(
+        _TEXT_DOMAIN,
+        buckets.filter(F.col("vec_id") >= boundary),
+        buckets.filter(F.col("vec_id") < boundary),
     )
-    fresh = all_new.join(dups.select("vec_id"), "vec_id", "left_anti").select(
-        "vec_id", F.lit("new").alias("verdict")
-    )
-    return (
-        dups.unionByName(fresh)
-        .select(F.col("vec_id").alias("doc_id"), "verdict")
-        .orderBy("doc_id")
-    )
+    return _verified_verdicts(pairs, sums, sums, new_docs, threshold_e6)
 
 
 def incremental_text_semantic_dedup(
@@ -1009,90 +928,37 @@ def incremental_text_semantic_dedup(
 
     boundary = INGEST_BOUNDARY if boundary is None else boundary
     docs = read_documents(spark, sf_dir)
+    new_docs = docs.filter(F.col("doc_id") >= boundary)
     if index_table is not None:
-
-        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
-        planes_list, bands = _text_family(props, index_table, require_text_center)
-        totals = _center_literals_frame(spark, props)
-        new_sums = embed_sums(docs.filter(F.col("doc_id") >= boundary))
-        # materialized once: the batch buckets feed the prune-key
-        # collect AND the probe join (O(batch) rows). Lazy: the collect
-        # is the materializing job — no separate eager pass (verdict #6)
-        new = centered_band_buckets(
-            new_sums, totals, planes_list=planes_list, bands=bands
-        ).localCheckpoint(eager=False)
-        # prune_index_scan (round-5 verdict #2): scan only the batch's
-        # touched (band, key) set - byte-identical output
-
-        existing = prune_index_scan(spark.table(index_table), new).filter(
-            F.col("vec_id") < boundary
+        return _text_index_verdicts(
+            spark, _TEXT_GLOBAL, new_docs, index_table, docs, threshold_e6,
+            boundary=boundary,
         )
-        # exact verify needs the EXISTING side's sums too — they are
-        # recomputed only for candidate ids (O(candidates)), not the
-        # whole corpus: semi-join the docs table on the candidate ids
-        sums_all = None
-    else:
-        # three consumers of the sums frame (totals, banding, verify) —
-        # materialize once, same rationale as text_near_dup_pairs.
-        # Family: auto-sized from the EXISTING (pre-boundary) corpus —
-        # the population an index built over it would have recorded
-        # (keeps the split path byte-identical to the indexed path in
-        # the driver-oracle scenario).
-        sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
-        existing_sums = sums.filter(F.col("doc_id") < boundary)
-        # ONE 1-row collect: literal centering totals + the family-
-        # sizing count off the same row (round-8, guide §1.2)
-        totals_lazy = embed_totals(existing_sums)
-        totals_rows = totals_lazy.collect()
-        totals = spark.createDataFrame(totals_rows, schema=totals_lazy.schema)
-        planes_list, bands = _resolve_text_family(
-            None, None, int(totals_rows[0]["n"])
-        )
-        buckets = centered_band_buckets(
-            sums, totals, planes_list=planes_list, bands=bands
-        )
-        existing = buckets.filter(F.col("vec_id") < boundary)
-        new = buckets.filter(F.col("vec_id") >= boundary)
-        sums_all = sums
-    pairs = (
-        new.join(
-            existing.select(F.col("vec_id").alias("evec"), "band", "key"),
-            ["band", "key"],
-        )
-        .select("vec_id", "evec")
-        .distinct()
+    # three consumers of the sums frame (totals, banding, verify) —
+    # materialize once, same rationale as text_near_dup_pairs.
+    # Family: auto-sized from the EXISTING (pre-boundary) corpus —
+    # the population an index built over it would have recorded
+    # (keeps the split path byte-identical to the indexed path in
+    # the driver-oracle scenario).
+    sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
+    existing_sums = sums.filter(F.col("doc_id") < boundary)
+    # ONE 1-row collect: literal centering totals + the family-
+    # sizing count off the same row (round-8, guide §1.2)
+    totals_lazy = embed_totals(existing_sums)
+    totals_rows = totals_lazy.collect()
+    totals = spark.createDataFrame(totals_rows, schema=totals_lazy.schema)
+    planes_list, bands = _resolve_text_family(
+        None, None, int(totals_rows[0]["n"])
     )
-    if sums_all is None:
-        cand_ids = pairs.select(F.col("evec").alias("doc_id")).distinct()
-        na_sums = new_sums
-        ne_sums = embed_sums(docs.join(cand_ids, "doc_id", "left_semi"))
-    else:
-        na_sums = ne_sums = sums_all
-    # exact verify: pure-JVM integer-sum cosine (round-5 verdict #4)
-    na = _sums_with_norm(na_sums).alias("na")
-    ne = _sums_with_norm(ne_sums).alias("ne")
-    scored = (
-        pairs.join(na, F.col("vec_id") == F.col("na.doc_id"))
-        .join(ne, F.col("evec") == F.col("ne.doc_id"))
-        .select("vec_id", _sums_cosine_e6("na", "ne").alias("score_e6"))
+    buckets = centered_band_buckets(
+        sums, totals, planes_list=planes_list, bands=bands
     )
-    dups = (
-        scored.filter(F.col("score_e6") >= threshold_e6)
-        .select("vec_id")
-        .distinct()
-        .select("vec_id", F.lit("near_dup").alias("verdict"))
+    pairs = _band_pairs(
+        _TEXT_GLOBAL,
+        buckets.filter(F.col("vec_id") >= boundary),
+        buckets.filter(F.col("vec_id") < boundary),
     )
-    all_new = docs.filter(F.col("doc_id") >= boundary).select(
-        F.col("doc_id").alias("vec_id")
-    )
-    fresh = all_new.join(dups.select("vec_id"), "vec_id", "left_anti").select(
-        "vec_id", F.lit("new").alias("verdict")
-    )
-    return (
-        dups.unionByName(fresh)
-        .select(F.col("vec_id").alias("doc_id"), "verdict")
-        .orderBy("doc_id")
-    )
+    return _verified_verdicts(pairs, sums, sums, new_docs, threshold_e6)
 
 
 def domain_totals(sums_dom: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
@@ -1327,19 +1193,201 @@ def require_clustered_centroids(props: dict, table: str) -> dict:
     return props
 
 
-def _clustered_cents_frame(spark: SparkSession, props: dict) -> DataFrame:
-    """Rebuild the frozen centroid frame from recorded properties
-    (repr-serialized doubles round-trip exactly — the IVF convention)."""
+# --- one probe core for the three text index variants ---
+#
+# Global, per-domain and clustered text indexes differ only in how a
+# batch is banded under the index's frozen state, which guards the
+# recorded properties must pass, the band-row key and whether pairing is
+# primary-anchored. Everything else — handshake, pruned scan, pairing,
+# exact verify, verdicts — is one path (``_text_index_verdicts``), and
+# the appends band their rows with the same ``band_batch``.
+
+
+def _band_global(spark, props, batch_docs, sums) -> DataFrame:
+    """(vec_id, band, key) batch rows under the index's frozen center."""
+    planes_list, bands = _index_family(props)
+    return centered_band_buckets(
+        sums, _center_literals_frame(spark, props), planes_list=planes_list,
+        bands=bands,
+    )
+
+
+def _band_domain(spark, props, batch_docs, sums) -> DataFrame:
+    """(vec_id, domain, band, key) batch rows under the frozen
+    per-domain centers, labelled by the index's RECORDED domain column;
+    documents of an unseen domain produce no rows."""
+    planes_list, bands = _index_family(props)
+    col = props.get("text.domain_col", "source")
+    return domain_centered_band_buckets(
+        sums.join(batch_docs.select("doc_id", F.col(col).alias("domain")), "doc_id"),
+        totals_dom=_domain_center_frame(spark, props),
+        planes_list=planes_list,
+        bands=bands,
+    )
+
+
+def _clustered_assign(spark, props, sums) -> DataFrame:
+    """(doc_id, domain, rn) soft membership under the frozen quantizer
+    rebuilt from the recorded centroids (repr-serialized doubles
+    round-trip exactly — the IVF convention), at the index's RECORDED
+    soft-assign width."""
     import json
 
     data = json.loads(props["clustered.centroids"])
-    return spark.createDataFrame(
+    cents = spark.createDataFrame(
         [
             (int(cid), [float(x) for x in vec])
             for cid, vec in sorted(data.items(), key=lambda kv: int(kv[0]))
         ],
         "centroid_id long, c_emb array<double>",
     )
+    return _clustered_soft_assign(
+        sums, cents, int(props.get("clustered.soft_assign", DEDUP_SOFT_ASSIGN))
+    )
+
+
+def _band_clustered(spark, props, batch_docs, sums, asg=None) -> DataFrame:
+    """(vec_id, domain, rn, band, key) batch rows: soft-assigned under
+    the frozen quantizer (``asg`` reuses an assignment the caller already
+    built) and centered on the frozen per-cluster means."""
+    planes_list, bands = _index_family(props)
+    if asg is None:
+        asg = _clustered_assign(spark, props, sums)
+    return domain_centered_band_buckets(
+        sums.join(asg, "doc_id"),
+        totals_dom=_domain_center_frame(spark, props),
+        planes_list=planes_list,
+        bands=bands,
+        carry=("rn",),
+    )
+
+
+@dataclass(frozen=True)
+class _TextVariant:
+    """One text index variant: its storage (whose bucket columns are the
+    band-row join key), the guards its recorded properties must pass,
+    whether pairs are primary-anchored (rows carry ``rn``), and
+    ``band_batch(spark, props, batch_docs, sums)``."""
+
+    index: IndexFamily
+    guards: tuple
+    anchored: bool
+    band_batch: Callable
+
+    def check(self, props: dict, table: str) -> None:
+        """Validate the properties of a text index that passed the
+        ``TEXT_PARAMS`` handshake: the recorded family, then each guard —
+        the order every text probe and append checks an index in."""
+        _index_family(props)
+        for guard in self.guards:
+            guard(props, table)
+
+    def open(self, spark: SparkSession, table: str) -> dict:
+        """Read the index's properties once, run the handshake and the
+        guards, return the properties."""
+        props = check_index_params(spark, table, TEXT_PARAMS, kind="cosine")
+        self.check(props, table)
+        return props
+
+
+_TEXT_GLOBAL = _TextVariant(TEXT_INDEX, (require_text_center,), False, _band_global)
+_TEXT_DOMAIN = _TextVariant(
+    TEXT_DOMAIN_INDEX, (require_domain_centers,), False, _band_domain
+)
+_TEXT_CLUSTERED = _TextVariant(
+    TEXT_DOMAIN_INDEX,
+    (require_clustered_centroids, require_domain_centers),
+    True,
+    _band_clustered,
+)
+
+
+def _band_pairs(spec: _TextVariant, new: DataFrame, existing: DataFrame) -> DataFrame:
+    """Distinct (vec_id, evec) pairs of batch rows ``new`` colliding
+    with index rows ``existing`` on the variant's key, the existing side
+    STRICTLY EARLIER (``evec < vec_id``: an already-appended copy of a
+    batch document is never its own partner) and, for the anchored
+    variant, at least one side in its primary cluster."""
+    keys = spec.index.bucket_cols
+    extra = [F.col("rn").alias("ern")] if spec.anchored else []
+    existing = existing.select(
+        F.col("vec_id").alias("evec"), *[F.col(k).alias("e" + k) for k in keys], *extra
+    )
+    cond = None
+    for k in keys:
+        eq = F.col(k) == F.col("e" + k)
+        cond = eq if cond is None else cond & eq
+    cond = cond & (F.col("evec") < F.col("vec_id"))
+    if spec.anchored:
+        cond = cond & ((F.col("rn") == 1) | (F.col("ern") == 1))
+    return new.join(existing, cond).select("vec_id", "evec").distinct()
+
+
+def _verified_verdicts(
+    pairs: DataFrame,
+    new_sums: DataFrame,
+    existing_sums: DataFrame,
+    batch: DataFrame,
+    threshold_e6: int,
+) -> DataFrame:
+    """(doc_id, verdict) ordered by doc_id: each candidate pair is
+    verified with the pure-JVM exact cosine of the integer sums (round-5
+    verdict #4); a batch document is ``near_dup`` iff some partner scores
+    ≥ ``threshold_e6``, every other document of ``batch`` (token-less
+    ones included) is ``new``."""
+    na = _sums_with_norm(new_sums).alias("na")
+    ne = _sums_with_norm(existing_sums).alias("ne")
+    dups = (
+        pairs.join(na, F.col("vec_id") == F.col("na.doc_id"))
+        .join(ne, F.col("evec") == F.col("ne.doc_id"))
+        .select("vec_id", _sums_cosine_e6("na", "ne").alias("score_e6"))
+        .filter(F.col("score_e6") >= threshold_e6)
+        .select("vec_id")
+        .distinct()
+        .select("vec_id", F.lit("near_dup").alias("verdict"))
+    )
+    fresh = (
+        batch.select(F.col("doc_id").alias("vec_id"))
+        .join(dups.select("vec_id"), "vec_id", "left_anti")
+        .select("vec_id", F.lit("new").alias("verdict"))
+    )
+    return (
+        dups.unionByName(fresh)
+        .select(F.col("vec_id").alias("doc_id"), "verdict")
+        .orderBy("doc_id")
+    )
+
+
+def _text_index_verdicts(
+    spark: SparkSession,
+    spec: _TextVariant,
+    batch: DataFrame,
+    index_table: str,
+    corpus: DataFrame,
+    threshold_e6: int,
+    boundary: int | None = None,
+) -> DataFrame:
+    """(doc_id, verdict) for one batch probed against a persisted text
+    index of variant ``spec``: open the index, embed and band the batch
+    under its frozen state, scan only the touched buckets
+    (``prune_index_scan``, round-5 verdict #2), pair strictly-earlier
+    collisions and verify them exactly. ``boundary`` additionally keeps
+    only index rows below it (the incremental split's consumption
+    guard). The existing side's sums are recomputed from ``corpus`` for
+    candidate ids only — O(candidates), never a corpus re-embed."""
+    props = spec.open(spark, index_table)
+    new_sums = embed_sums(batch)
+    # materialized once: the batch rows feed the prune-key collect AND
+    # the probe join (O(batch) rows). Lazy: the collect is the
+    # materializing job — no separate eager pass (verdict #6)
+    new = spec.band_batch(spark, props, batch, new_sums).localCheckpoint(eager=False)
+    existing = prune_index_scan(spark.table(index_table), new)
+    if boundary is not None:
+        existing = existing.filter(F.col("vec_id") < boundary)
+    pairs = _band_pairs(spec, new, existing)
+    cand_ids = pairs.select(F.col("evec").alias("doc_id")).distinct()
+    existing_sums = embed_sums(corpus.join(cand_ids, "doc_id", "left_semi"))
+    return _verified_verdicts(pairs, new_sums, existing_sums, batch, threshold_e6)
 
 
 def persist_text_clustered_index(
@@ -1419,13 +1467,8 @@ def append_to_text_clustered_index(
     cluster that had ZERO primary members at build time."""
 
     def rows_for(props):
-        planes_list, bands = _index_family(props)
         sums = embed_sums(docs_batch)
-        asg = _clustered_soft_assign(
-            sums,
-            _clustered_cents_frame(spark, props),
-            int(props.get("clustered.soft_assign", DEDUP_SOFT_ASSIGN)),
-        )
+        asg = _clustered_assign(spark, props, sums)
         unseen = _unseen_domains(
             props, asg.filter(F.col("rn") == 1).select("domain")
         )
@@ -1436,19 +1479,11 @@ def append_to_text_clustered_index(
                 "build time) — rebuild the index so those clusters carry a "
                 "centering statistic."
             )
-        return domain_centered_band_buckets(
-            sums.join(asg, "doc_id"),
-            totals_dom=_domain_center_frame(spark, props),
-            planes_list=planes_list,
-            bands=bands,
-            carry=("rn",),
-        )
+        return _band_clustered(spark, props, docs_batch, sums, asg=asg)
 
     return append_index_batch(
         spark, TEXT_DOMAIN_INDEX, index_table, docs_batch, TEXT_PARAMS, rows_for,
-        check=lambda props, t: _text_family(
-            props, t, require_clustered_centroids, require_domain_centers
-        ),
+        check=_TEXT_CLUSTERED.check,
     )
 
 
@@ -1479,111 +1514,45 @@ def incremental_text_clustered_dedup(
 
     boundary = INGEST_BOUNDARY if boundary is None else boundary
     docs = read_documents(spark, sf_dir)
+    new_docs = docs.filter(F.col("doc_id") >= boundary)
     if index_table is not None:
+        return _text_index_verdicts(
+            spark, _TEXT_CLUSTERED, new_docs, index_table, docs, threshold_e6,
+            boundary=boundary,
+        )
+    from .similarity import _ivf_cents_frame_from_rows, kmeans_centroids
 
-        props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
-        planes_list, bands = _text_family(
-            props, index_table, require_clustered_centroids, require_domain_centers
-        )
-        totals = _domain_center_frame(spark, props)
-        new_docs = docs.filter(F.col("doc_id") >= boundary)
-        new_sums = embed_sums(new_docs)
-        asg_new = _clustered_soft_assign(
-            new_sums,
-            _clustered_cents_frame(spark, props),
-            int(props.get("clustered.soft_assign", soft_assign)),
-        )
-        # lazy: the prune-key collect is the materializing job
-        new = domain_centered_band_buckets(
-            new_sums.join(asg_new, "doc_id"),
-            totals_dom=totals,
-            planes_list=planes_list,
-            bands=bands,
-            carry=("rn",),
-        ).localCheckpoint(eager=False)
-        existing = prune_index_scan(spark.table(index_table), new).filter(
-            F.col("vec_id") < boundary
-        )
-        sums_all = None
-    else:
-        from .similarity import _ivf_cents_frame_from_rows, kmeans_centroids
-
-        sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
-        pre_sums = sums.filter(F.col("doc_id") < boundary)
-        cents_rows = kmeans_centroids(
-            _scaled_text_emb(pre_sums), n_centroids=n_clusters
-        ).collect()
-        cents = _ivf_cents_frame_from_rows(spark, cents_rows)
-        asg = _clustered_soft_assign(sums, cents, soft_assign).localCheckpoint(
-            eager=False
-        )
-        primary_pre = asg.filter(
-            (F.col("rn") == 1) & (F.col("doc_id") < boundary)
-        ).select("doc_id", "domain")
-        totals_rows = domain_totals(pre_sums.join(primary_pre, "doc_id")).collect()
-        n_max = max((int(r["n"]) for r in totals_rows), default=0)
-        totals = _domain_center_frame(
-            spark, {"text.domain_centers": _domain_centers_json(totals_rows)}
-        )
-        planes_list, bands = _resolve_text_family(None, None, n_max)
-        buckets = domain_centered_band_buckets(
-            sums.join(asg, "doc_id"),
-            totals_dom=totals,
-            planes_list=planes_list,
-            bands=bands,
-            carry=("rn",),
-        )
-        existing = buckets.filter(F.col("vec_id") < boundary)
-        new = buckets.filter(F.col("vec_id") >= boundary)
-        new_sums = sums
-        sums_all = sums
-    pairs = (
-        new.alias("n")
-        .join(
-            existing.select(
-                F.col("vec_id").alias("evec"),
-                "domain",
-                "band",
-                "key",
-                F.col("rn").alias("ern"),
-            ),
-            ["domain", "band", "key"],
-        )
-        # primary-anchored: at least one side in its argmax cluster
-        .filter((F.col("n.rn") == 1) | (F.col("ern") == 1))
-        .select("vec_id", "evec")
-        .distinct()
+    sums = embed_sums(docs, parallel=True).localCheckpoint(eager=False)
+    pre_sums = sums.filter(F.col("doc_id") < boundary)
+    cents_rows = kmeans_centroids(
+        _scaled_text_emb(pre_sums), n_centroids=n_clusters
+    ).collect()
+    cents = _ivf_cents_frame_from_rows(spark, cents_rows)
+    asg = _clustered_soft_assign(sums, cents, soft_assign).localCheckpoint(
+        eager=False
     )
-    if sums_all is None:
-        cand_ids = pairs.select(F.col("evec").alias("doc_id")).distinct()
-        na_sums = new_sums
-        ne_sums = embed_sums(docs.join(cand_ids, "doc_id", "left_semi"))
-    else:
-        na_sums = ne_sums = sums_all
-    na = _sums_with_norm(na_sums).alias("na")
-    ne = _sums_with_norm(ne_sums).alias("ne")
-    scored = (
-        pairs.join(na, F.col("vec_id") == F.col("na.doc_id"))
-        .join(ne, F.col("evec") == F.col("ne.doc_id"))
-        .select("vec_id", _sums_cosine_e6("na", "ne").alias("score_e6"))
+    primary_pre = asg.filter(
+        (F.col("rn") == 1) & (F.col("doc_id") < boundary)
+    ).select("doc_id", "domain")
+    totals_rows = domain_totals(pre_sums.join(primary_pre, "doc_id")).collect()
+    n_max = max((int(r["n"]) for r in totals_rows), default=0)
+    totals = _domain_center_frame(
+        spark, {"text.domain_centers": _domain_centers_json(totals_rows)}
     )
-    dups = (
-        scored.filter(F.col("score_e6") >= threshold_e6)
-        .select("vec_id")
-        .distinct()
-        .select("vec_id", F.lit("near_dup").alias("verdict"))
+    planes_list, bands = _resolve_text_family(None, None, n_max)
+    buckets = domain_centered_band_buckets(
+        sums.join(asg, "doc_id"),
+        totals_dom=totals,
+        planes_list=planes_list,
+        bands=bands,
+        carry=("rn",),
     )
-    all_new = docs.filter(F.col("doc_id") >= boundary).select(
-        F.col("doc_id").alias("vec_id")
+    pairs = _band_pairs(
+        _TEXT_CLUSTERED,
+        buckets.filter(F.col("vec_id") >= boundary),
+        buckets.filter(F.col("vec_id") < boundary),
     )
-    fresh = all_new.join(dups.select("vec_id"), "vec_id", "left_anti").select(
-        "vec_id", F.lit("new").alias("verdict")
-    )
-    return (
-        dups.unionByName(fresh)
-        .select(F.col("vec_id").alias("doc_id"), "verdict")
-        .orderBy("doc_id")
-    )
+    return _verified_verdicts(pairs, sums, sums, new_docs, threshold_e6)
 
 
 def semantic_dedup_text_clustered(
@@ -1686,55 +1655,8 @@ def text_semantic_verdicts_for_batch(
     equality asserted in the streaming test). ``corpus_docs`` must be
     the index's build corpus (plus appended batches) — only candidate
     ids are re-embedded from it, O(candidates) not O(corpus)."""
-
-    props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
-    planes_list, bands = _text_family(props, index_table, require_text_center)
-    totals = _center_literals_frame(spark, props)
-    new_sums = embed_sums(batch_docs)
-    # lazy: the prune-key collect is the materializing job (verdict #6)
-    new = centered_band_buckets(
-        new_sums, totals, planes_list=planes_list, bands=bands
-    ).localCheckpoint(eager=False)
-    existing = prune_index_scan(spark.table(index_table), new).select(
-        F.col("vec_id").alias("evec"),
-        F.col("band").alias("eband"),
-        F.col("key").alias("ekey"),
-    )
-    pairs = (
-        new.join(
-            existing,
-            (F.col("band") == F.col("eband"))
-            & (F.col("key") == F.col("ekey"))
-            & (F.col("evec") < F.col("vec_id")),
-        )
-        .select("vec_id", "evec")
-        .distinct()
-    )
-    cand_ids = pairs.select(F.col("evec").alias("doc_id")).distinct()
-    na = _sums_with_norm(new_sums).alias("na")
-    ne = _sums_with_norm(
-        embed_sums(corpus_docs.join(cand_ids, "doc_id", "left_semi"))
-    ).alias("ne")
-    scored = (
-        pairs.join(na, F.col("vec_id") == F.col("na.doc_id"))
-        .join(ne, F.col("evec") == F.col("ne.doc_id"))
-        .select("vec_id", _sums_cosine_e6("na", "ne").alias("score_e6"))
-    )
-    dups = (
-        scored.filter(F.col("score_e6") >= threshold_e6)
-        .select("vec_id")
-        .distinct()
-        .select("vec_id", F.lit("near_dup").alias("verdict"))
-    )
-    fresh = (
-        batch_docs.select(F.col("doc_id").alias("vec_id"))
-        .join(dups.select("vec_id"), "vec_id", "left_anti")
-        .select("vec_id", F.lit("new").alias("verdict"))
-    )
-    return (
-        dups.unionByName(fresh)
-        .select(F.col("vec_id").alias("doc_id"), "verdict")
-        .orderBy("doc_id")
+    return _text_index_verdicts(
+        spark, _TEXT_GLOBAL, batch_docs, index_table, corpus_docs, threshold_e6
     )
 
 
@@ -1757,68 +1679,8 @@ def text_clustered_verdicts_for_batch(
     uses the STRICTLY-EARLIER guard (``index vec_id < doc_id``), which
     equals the boundary split whenever the index holds exactly the
     pre-batch corpus and the batch's ids are past its watermark."""
-
-    props = check_index_params(spark, index_table, TEXT_PARAMS, kind="cosine")
-    planes_list, bands = _text_family(
-        props, index_table, require_clustered_centroids, require_domain_centers
-    )
-    totals = _domain_center_frame(spark, props)
-    new_sums = embed_sums(batch_docs)
-    asg = _clustered_soft_assign(
-        new_sums,
-        _clustered_cents_frame(spark, props),
-        int(props.get("clustered.soft_assign", DEDUP_SOFT_ASSIGN)),
-    )
-    # lazy: the prune-key collect is the materializing job
-    new = domain_centered_band_buckets(
-        new_sums.join(asg, "doc_id"),
-        totals_dom=totals,
-        planes_list=planes_list,
-        bands=bands,
-        carry=("rn",),
-    ).localCheckpoint(eager=False)
-    existing = prune_index_scan(spark.table(index_table), new).select(
-        F.col("vec_id").alias("evec"),
-        "domain",
-        "band",
-        "key",
-        F.col("rn").alias("ern"),
-    )
-    pairs = (
-        new.alias("n")
-        .join(existing, ["domain", "band", "key"])
-        .filter(
-            (F.col("evec") < F.col("vec_id"))
-            & ((F.col("n.rn") == 1) | (F.col("ern") == 1))
-        )
-        .select("vec_id", "evec")
-        .distinct()
-    )
-    cand_ids = pairs.select(F.col("evec").alias("doc_id")).distinct()
-    na = _sums_with_norm(new_sums).alias("na")
-    ne = _sums_with_norm(
-        embed_sums(corpus_docs.join(cand_ids, "doc_id", "left_semi"))
-    ).alias("ne")
-    scored = (
-        pairs.join(na, F.col("vec_id") == F.col("na.doc_id"))
-        .join(ne, F.col("evec") == F.col("ne.doc_id"))
-        .select("vec_id", _sums_cosine_e6("na", "ne").alias("score_e6"))
-    )
-    dups = (
-        scored.filter(F.col("score_e6") >= threshold_e6)
-        .select("vec_id")
-        .distinct()
-        .select("vec_id", F.lit("near_dup").alias("verdict"))
-    )
-    fresh = (
-        batch_docs.select(F.col("doc_id").alias("vec_id"))
-        .join(dups.select("vec_id"), "vec_id", "left_anti")
-        .select("vec_id", F.lit("new").alias("verdict"))
-    )
-    return (
-        dups.unionByName(fresh)
-        .select(F.col("vec_id").alias("doc_id"), "verdict")
-        .orderBy("doc_id")
+    return _text_index_verdicts(
+        spark, _TEXT_CLUSTERED, batch_docs, index_table, corpus_docs, threshold_e6
     )
 
 

@@ -103,11 +103,20 @@ def cosine_e6(a: Column, b: Column) -> Column:
 # crossJoin / argmax aggregate exists at all (guide §4.2).
 
 
+# centroid-id headroom under the score in ``_topn_cids_udf``'s sort key
+_CID_LIMIT = 1 << 20
+
+
 def _cents_matrix(cents: DataFrame):
     """(ids, matrix) numpy closure data from a K-row centroid frame,
     sorted by centroid id. K is a parameter (n_centroids), never corpus
     cardinality — this collect is the same control-plane class as the
-    trainer's seed/means collects."""
+    trainer's seed/means collects. Every centroid set — trained, or
+    adopted from an IVF or clustered index's recorded properties —
+    passes here, so it is validated here: ids must lie in
+    [0, 2**20) (the top-n key's id field would otherwise bleed into the
+    score and mis-rank silently) and vectors must be of one width and
+    finite."""
     import numpy as np
 
     rows = sorted(
@@ -117,9 +126,22 @@ def _cents_matrix(cents: DataFrame):
     cids = np.array([c for c, _ in rows], dtype=np.int64)
     if not rows:  # reshape(0, -1) raises; callers branch on len == 0
         return cids, np.zeros((0, 0), dtype=np.float64)
+    bad = [c for c, _ in rows if not 0 <= c < _CID_LIMIT]
+    if bad:
+        raise ValueError(
+            f"invalid centroids: ids {bad} lie outside [0, 2**20) — the "
+            "top-n centroid key cannot order them."
+        )
+    widths = sorted({len(v) for _, v in rows})
+    if len(widths) != 1:
+        raise ValueError(
+            f"invalid centroids: ragged vectors of widths {widths}."
+        )
     mat = np.array([v for _, v in rows], dtype=np.float64).reshape(
         len(rows), -1
     )
+    if not np.isfinite(mat).all():
+        raise ValueError("invalid centroids: non-finite vector components.")
     return cids, mat
 
 
@@ -134,7 +156,7 @@ def _topn_cids_udf(cids, cmat, n: int):
     from pyspark.sql import types as T
 
     cn = np.linalg.norm(cmat, axis=1)
-    m_enc = 1 << 20  # centroid-id headroom under the score in the key
+    m_enc = _CID_LIMIT
 
     def _top(emb):
         mat = np.array(emb.tolist(), dtype=np.float64)

@@ -1051,6 +1051,15 @@ def test_streaming_semantic_verdicts_equal_batch_incremental(spark, tmp_path):
         assert set(want[want["verdict"] == "near_dup"]["doc_id"]) == {
             100, 101, 102, 103, 104
         }
+        # the indexed reference runs the stream's own kernel; the
+        # boundary-split path (the driver-oracle path) is independent
+        split = (
+            emb.incremental_text_semantic_dedup(spark, str(tmp_path), boundary=100)
+            .toPandas()
+            .sort_values("doc_id")
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(split, want)
 
         # stream the same batch through the verdict tier
         src = str(tmp_path / "in")
@@ -1156,6 +1165,15 @@ def test_streaming_clustered_verdicts_equal_batch_incremental(spark, tmp_path):
         assert set(want[want["verdict"] == "near_dup"]["doc_id"]) == {
             100, 101, 102, 103, 104
         }
+        # the indexed reference runs the stream's own kernel; the
+        # boundary-split path (the driver-oracle path) is independent
+        split = (
+            emb.incremental_text_clustered_dedup(spark, str(tmp_path), boundary=100)
+            .toPandas()
+            .sort_values("doc_id")
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(split, want)
 
         src = str(tmp_path / "in")
         spark.createDataFrame(
@@ -1515,6 +1533,15 @@ def test_streaming_minhash_verdicts_equal_batch_incremental(spark, tmp_path, ban
             .reset_index(drop=True)
         )
         assert list(want["verdict"]) == ["new", "near_dup", "new"]
+        # the indexed reference runs the stream's own kernel; the
+        # boundary-split path (the driver-oracle path) is independent
+        split = (
+            incremental_verified_dedup(spark, str(tmp_path), boundary=100)
+            .toPandas()
+            .sort_values("doc_id")
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(split, want)
 
         src = str(tmp_path / "in")
         spark.createDataFrame(

@@ -1,7 +1,9 @@
 """The seven bucketed index families through their shared persist/append
 core (``sources/catalog.py``): the exact TBLPROPERTIES manifest each
 family writes, and the append crash window exercised by fault
-injection rather than simulated."""
+injection rather than simulated. The three text variants also share one
+probe core (``embedding._text_index_verdicts``): degenerate batches and
+tampered recorded centroids go through it."""
 
 import pandas as pd
 import pytest
@@ -298,3 +300,127 @@ def test_append_crash_window_fault_injection(spark, tmp_path, monkeypatch, famil
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {crashed}")
         spark.sql(f"DROP TABLE IF EXISTS {clean}")
+
+
+# --- the text probe core: three variants, one banding and probe path ---
+
+TEXT_VARIANTS = {
+    "text_cosine": (
+        embedding._TEXT_GLOBAL, embedding.incremental_text_semantic_dedup
+    ),
+    "text_domain": (
+        embedding._TEXT_DOMAIN, embedding.incremental_text_domain_dedup
+    ),
+    "text_clustered": (
+        embedding._TEXT_CLUSTERED, embedding.incremental_text_clustered_dedup
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def text_indexes(spark, tmp_path_factory):
+    """Each text variant persisted once over ids < BUILD_END."""
+    root = tmp_path_factory.mktemp("text_core")
+    names = {}
+    for variant in TEXT_VARIANTS:
+        names[variant] = f"t_core_probe_{variant}"
+        _persist(spark, FAMILIES[variant], names[variant], str(root / variant))
+    yield names
+    for name in names.values():
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def _degenerate_batch(spark, case):
+    """(doc_id, text, lang, source, n_chars) rows at ids >= BUILD_END."""
+    if case == "empty":
+        return []
+    r = _docs(spark).filter(F.col("doc_id") == 7).collect()[0]
+    if case == "one":  # an exact copy of an indexed document
+        return [(BUILD_END, r["text"], r["lang"], r["source"], r["n_chars"])]
+    return [
+        (BUILD_END + i, text, r["lang"], r["source"], len(text))
+        for i, text in enumerate(["", "   ", " "])
+    ]
+
+
+@pytest.mark.parametrize("case", ["empty", "one", "tokenless"])
+@pytest.mark.parametrize("variant", sorted(TEXT_VARIANTS))
+def test_text_probe_core_degenerate_batches(
+    spark, tmp_path, text_indexes, variant, case
+):
+    """An empty batch, a one-document batch and a batch of token-less
+    documents, through ``incremental_text_*(index_table=)`` and through
+    the probe kernel: no error, no rows for the empty batch, ``new`` for
+    every token-less document, and the indexed document's copy flagged
+    ``near_dup``."""
+    spec, incremental = TEXT_VARIANTS[variant]
+    table = text_indexes[variant]
+    rows = _degenerate_batch(spark, case)
+    schema = _docs(spark).schema
+    docs = _id_window(_docs(spark), "doc_id", 0, BUILD_END).unionByName(
+        spark.createDataFrame(rows, schema)
+    )
+    docs.write.parquet(f"{tmp_path}/documents.parquet")
+    want = {
+        "empty": [],
+        "one": [(BUILD_END, "near_dup")],
+        "tokenless": [(d, "new") for d, *_ in rows],
+    }[case]
+
+    def got(df):
+        return [(r["doc_id"], r["verdict"]) for r in df.collect()]
+
+    assert got(
+        incremental(spark, str(tmp_path), boundary=BUILD_END, index_table=table)
+    ) == want
+    batch = spark.read.parquet(f"{tmp_path}/documents.parquet").filter(
+        F.col("doc_id") >= BUILD_END
+    )
+    assert got(
+        embedding._text_index_verdicts(
+            spark, spec, batch, table, _docs(spark),
+            embedding.TEXT_NEAR_DUP_THRESHOLD_E6,
+        )
+    ) == want
+
+
+def test_adopted_clustered_centroids_are_validated(spark, tmp_path):
+    """Recorded centroids pass ``similarity._cents_matrix``'s checks
+    before any assignment: a tampered ``clustered.centroids`` with an id
+    of 2**20 (the top-n key's id field would bleed into the score) or a
+    short vector fails the probe and the append with a named error."""
+    import json
+
+    fam = FAMILIES["text_clustered"]
+    name = "t_core_tampered"
+    try:
+        _persist(spark, fam, name, str(tmp_path / "idx"))
+        recorded = json.loads(
+            catalog.get_table_properties(spark, name)["clustered.centroids"]
+        )
+        first = min(recorded, key=int)
+        batch = fam["batch"](spark)
+
+        big_id = dict(recorded)
+        big_id[str(1 << 20)] = big_id.pop(first)
+        catalog.set_table_properties(
+            spark, name, {"clustered.centroids": json.dumps(big_id)}
+        )
+        with pytest.raises(ValueError, match=r"outside \[0, 2\*\*20\)"):
+            embedding.text_clustered_verdicts_for_batch(
+                spark, batch, name, _docs(spark)
+            )
+        with pytest.raises(ValueError, match=r"outside \[0, 2\*\*20\)"):
+            fam["append"](spark, batch, name)
+
+        short = dict(recorded)
+        short[first] = short[first][:-1]
+        catalog.set_table_properties(
+            spark, name, {"clustered.centroids": json.dumps(short)}
+        )
+        with pytest.raises(ValueError, match="ragged"):
+            embedding.text_clustered_verdicts_for_batch(
+                spark, batch, name, _docs(spark)
+            )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
