@@ -180,7 +180,8 @@ def test_staging_gives_partition_pruned_bucket_reads(spark, tmp_path, corpus):
     """One-pass staging (round-1 verdict #7): the bucketed input is
     written once partitioned by bucket, so each per-bucket read is
     directory-pruned — never another full input scan. Also: a resume
-    reuses the existing staging instead of rewriting it."""
+    reuses the existing staging instead of rewriting it, staging holds
+    only the uncommitted buckets, and a completed run leaves none."""
     import os
 
     out_dir = str(tmp_path / "out")
@@ -197,7 +198,9 @@ def test_staging_gives_partition_pruned_bucket_reads(spark, tmp_path, corpus):
         f"bucket={r['bucket']}"
         for r in cp.with_bucket(df, N_BUCKETS).select("bucket").distinct().collect()
     }
-    assert subdirs == nonempty
+    # committed buckets are reaped: staging keeps the uncommitted ones
+    uncommitted = set(range(N_BUCKETS)) - set(cp.completed_buckets(spark, ckpt))
+    assert subdirs == nonempty & {f"bucket={b}" for b in uncommitted}
     stamp = os.path.getmtime(os.path.join(staging, "_SUCCESS"))
     # a per-bucket read plans a PartitionFilters prune on `bucket`
     staged = spark.read.parquet(staging)
@@ -208,11 +211,19 @@ def test_staging_gives_partition_pruned_bucket_reads(spark, tmp_path, corpus):
         .toString()
     )
     assert "PartitionFilters" in plan and "bucket" in plan
-    # resume completes the failed bucket from staging without rewriting it
-    assert cp.run_with_checkpoint(
-        spark, df, out_dir, ckpt, "r2", n_buckets=N_BUCKETS
-    ) == [N_BUCKETS - 1]
+    # a resume reads the failed bucket from staging without rewriting it
+    with pytest.raises(RuntimeError, match="injected failure"):
+        cp.run_with_checkpoint(
+            spark, df, out_dir, ckpt, "r2",
+            n_buckets=N_BUCKETS, fail_buckets={N_BUCKETS - 1},
+        )
     assert os.path.getmtime(os.path.join(staging, "_SUCCESS")) == stamp
+    assert cp.run_with_checkpoint(
+        spark, df, out_dir, ckpt, "r3", n_buckets=N_BUCKETS
+    ) == [N_BUCKETS - 1]
+    # a completed run leaves no staged data behind
+    assert not os.path.exists(staging)
+    assert sorted(os.listdir(ckpt)) == ["lineage", "manifest"]
 
 
 def test_concurrent_buckets_match_sequential(spark, tmp_path, corpus):
